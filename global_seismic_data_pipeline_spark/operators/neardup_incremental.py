@@ -98,7 +98,7 @@ def _index_rows(
 
 def build_minhash_index(
     warehouse: Warehouse,
-    docs: DataFrame,
+    docs: DataFrame | None,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -125,9 +125,15 @@ def build_minhash_index(
     STORED sets, so a reuse rebuild validates them against the stored
     meta and refuses loudly on mismatch — a silent mismatch would
     Jaccard-verify w-shingles against w'-shingle sets and miss every
-    cross-corpus duplicate."""
+    cross-corpus duplicate. A reuse rebuild reads no text, so it takes
+    ``docs=None`` and refuses a frame it would otherwise ignore."""
     if not 1 <= bands <= num_hashes or num_hashes % bands:
         raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
+    if reuse_sets and docs is not None:
+        raise ValueError(
+            "reuse_sets=True rebuilds from the stored shingle sets and "
+            "reads no docs — pass docs=None"
+        )
     if reuse_sets:
         meta_now = _load_meta(warehouse, name)
         fixed = {

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup
 from ..state import WatermarkStore
-from ..sources.warehouse import Warehouse
+from ..sources.warehouse import Warehouse, overwrite_counted
 
 BRONZE_TABLE = "bronze_earthquakes"
 
@@ -100,15 +100,11 @@ def dedup_rewrite(wh: Warehouse) -> int:
     count rides the rewrite via ``observe`` — one pass, not a count job
     plus a write job.
     """
-    from pyspark.sql import Observation
-
     bronze = wh.read(BRONZE_TABLE)
     deduped = dedup.keep_latest(
         bronze, ["event_id"], "ingestion_ts", ["batch_id"]
     )
-    obs = Observation()
-    wh.overwrite(deduped.observe(obs, F.count(F.lit(1)).alias("n")), BRONZE_TABLE)
-    return obs.get["n"]
+    return overwrite_counted(wh, deduped, BRONZE_TABLE)
 
 
 def utc_batch_id(now: datetime | None = None) -> str:

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..functions import physics as phy
 from ..functions.risk import risk_level_from_score
 from ..operators.rolling import rolling_metrics
-from ..sources.warehouse import Warehouse
+from ..sources.warehouse import Warehouse, overwrite_counted
 from .silver import SILVER_TABLE
 
 GOLD_TABLES = (
@@ -191,23 +191,20 @@ def regional_physics(
 
 def run_gold(wh: Warehouse, *, clock: datetime | None = None) -> dict[str, int]:
     """Materialize all six gold tables from silver (overwrite semantics,
-    ref: 05:79,123,153,187; calculations.py:149-152,222-225)."""
+    ref: 05:79,123,153,187; calculations.py:149-152,222-225). Returns each
+    table's row count, observed on its write."""
     silver = wh.read(SILVER_TABLE)
-    counts: dict[str, int] = {}
     builders = {
         "gold_regional_risk": lambda: regional_risk(silver, clock),
         "gold_temporal_metrics": lambda: temporal_metrics(silver, clock),
         "gold_kpi_summary": lambda: kpi_summary(silver, clock),
         "gold_region_summary": lambda: region_summary(silver, clock),
+        "gold_physics_analysis": lambda: physics_analysis(silver, clock),
+        "gold_regional_physics": lambda: regional_physics(
+            wh.read("gold_physics_analysis"), clock
+        ),
     }
-    for name, build in builders.items():
-        df = build()
-        wh.overwrite(df, name)
-        counts[name] = wh.read(name).count()
-    pa = physics_analysis(silver, clock)
-    wh.overwrite(pa, "gold_physics_analysis")
-    counts["gold_physics_analysis"] = wh.read("gold_physics_analysis").count()
-    rp = regional_physics(wh.read("gold_physics_analysis"), clock)
-    wh.overwrite(rp, "gold_regional_physics")
-    counts["gold_regional_physics"] = wh.read("gold_regional_physics").count()
-    return counts
+    return {
+        name: overwrite_counted(wh, build(), name)
+        for name, build in builders.items()
+    }

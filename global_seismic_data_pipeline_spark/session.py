@@ -57,7 +57,7 @@ def get_spark(
 
 def tiny_df(spark: SparkSession, rows, schema):
     """Single-partition DataFrame from a handful of DRIVER-side rows —
-    the control-table write shape (watermarks, epoch markers, stats).
+    the control-table write shape (epoch markers, stats).
 
     ``createDataFrame(rows, schema).coalesce(1)`` looks equivalent but
     costs ~4 s per call on local[32]: the Python-rows relation

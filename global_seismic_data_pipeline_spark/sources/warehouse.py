@@ -20,6 +20,26 @@ table instead of touched files only. At cluster scale you'd bound the rewrite
 by partitioning the table (e.g. by event month) and merging only partitions
 that contain update keys; ``merge`` takes ``prune_partition_col`` to do
 exactly that when the table is directory-partitioned.
+
+Reads: ``spark.read.load(path)`` launches one schema-inference job per
+call, even for a table that has not changed — on a dashboard page that is
+9 of its 22–23 jobs. Each ``Warehouse`` therefore remembers, per table, the
+schema it last inferred together with a fingerprint of what inference
+depends on: the sorted ``(relative path, size, mtime_ns)`` of every file
+under the table directory (summary files included — parquet inference
+reads ``_metadata``/``_common_metadata`` when present) and the session
+confs that change what inference returns (``_SCHEMA_CONFS``); the format
+is fixed per instance. On a match the read passes the remembered schema to
+``spark.read.schema(...)``; Spark still lists the files fresh, so a read
+never sees a stale file list, and the file set is taken again after the
+load so that a write landing mid-read falls back to inference. The memo
+cannot go stale without hooks in the write paths: every writer — this
+instance, another ``Warehouse`` on the same root, or raw Spark — adds,
+removes or replaces files, which changes the fingerprint and forces a
+fresh inference. The same files under the same confs give the same
+inferred schema, so a hit only skips work whose result is already known.
+The Delta and Iceberg backends override ``read`` and take the schema from
+their logs, so they never infer and need no memo.
 """
 
 from __future__ import annotations
@@ -32,6 +52,37 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# session confs whose value changes the schema that file-source inference
+# returns for the same files (part of the read memo's fingerprint)
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.orc.mergeSchema",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.session.timeZone",
+)
+
+
+def _file_set(path: str) -> tuple:
+    """Sorted (relative path, size, mtime_ns) of every file under ``path``
+    — what schema inference reads, summary files included."""
+    out = []
+    for root_, _dirs, fnames in os.walk(path):
+        for f in fnames:
+            full = os.path.join(root_, f)
+            try:
+                st = os.stat(full)
+            except FileNotFoundError:  # a concurrent writer moved it
+                continue
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
 
 
 class Warehouse:
@@ -55,6 +106,8 @@ class Warehouse:
         # set by merge() while a schema-evolving rewrite is in flight;
         # the lakehouse backends' commit paths consult it
         self._pending_merge_schema = False
+        # table name -> (inference fingerprint, inferred schema); see read()
+        self._schemas: dict[str, tuple[tuple, StructType]] = {}
         os.makedirs(root, exist_ok=True)
 
     # -- paths ------------------------------------------------------------
@@ -144,7 +197,22 @@ class Warehouse:
 
     # -- read / write -----------------------------------------------------
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.format(self.fmt).load(self.path(name))
+        """The table as a DataFrame. Skips schema inference (one Spark
+        job) when the table's files and the inference confs match the
+        last inference this instance made (module docstring, "Reads")."""
+        path = self.path(name)
+        files = _file_set(path)
+        key = (files, tuple(self.spark.conf.get(k) for k in _SCHEMA_CONFS))
+        memo = self._schemas.get(name)
+        if memo is not None and memo[0] == key:
+            df = self.spark.read.schema(memo[1]).format(self.fmt).load(path)
+            # Spark listed the files inside load(); unchanged on both
+            # sides of it means it listed exactly the fingerprinted set
+            if _file_set(path) == files:
+                return df
+        df = self.spark.read.format(self.fmt).load(path)
+        self._schemas[name] = (key, df.schema)
+        return df
 
     def append(
         self, df: DataFrame, name: str, partition_by: Sequence[str] = ()
@@ -519,9 +587,7 @@ class Warehouse:
         parser — the single source of type-name truth. Refuses a string
         that parses as MORE than one field ("int, b string") — taking
         field[0] would silently drop the rest."""
-        from pyspark.sql.types import StructType as _St
-
-        st = _St.fromDDL(f"__c {type_str}")
+        st = StructType.fromDDL(f"__c {type_str}")
         if len(st.fields) != 1:
             raise ValueError(
                 f"expected ONE column type, got {type_str!r} (parses as "
@@ -725,6 +791,16 @@ class Warehouse:
                 return cols
             cols.append(sub[0].split("=", 1)[0])
             p = os.path.join(p, sub[0])
+
+
+def overwrite_counted(wh: Warehouse, df: DataFrame, name: str) -> int:
+    """``wh.overwrite(df, name)`` returning the rows written, counted by an
+    ``Observation`` that rides the write — no read-back count job."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    wh.overwrite(df.observe(obs, F.count(F.lit(1)).alias("n")), name)
+    return obs.get["n"]
 
 
 class ConstraintViolation(ValueError):

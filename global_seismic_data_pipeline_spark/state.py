@@ -20,6 +20,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
+from pyspark.sql import functions as F
+
 from .schemas import CONTROL_WATERMARK
 from .sources.warehouse import Warehouse
 
@@ -79,9 +81,13 @@ class WatermarkStore:
             )
             for e in entries.values()
         ]
-        from .session import tiny_df
-
-        df = tiny_df(self.wh.spark, rows, CONTROL_WATERMARK)
+        # literal rows in one JVM-only task (a Python-rows relation would
+        # start a Python worker); the struct cast applies the schema's
+        # names, types and nullability
+        structs = [F.struct(*map(F.lit, r)).cast(CONTROL_WATERMARK) for r in rows]
+        df = self.wh.spark.range(1, numPartitions=1).select(
+            F.inline(F.array(*structs))
+        )
         self.wh.overwrite(df, CONTROL_TABLE)
 
     # -- API ---------------------------------------------------------------

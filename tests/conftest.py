@@ -2,12 +2,15 @@
 
 from __future__ import annotations
 
+import contextlib
+import itertools
+import os
 import sys
 from datetime import datetime
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from global_seismic_data_pipeline_spark.schemas import BRONZE_EARTHQUAKES
 from global_seismic_data_pipeline_spark.session import get_spark
@@ -22,6 +25,29 @@ def spark():
         extra_conf={"spark.sql.streaming.schemaInference": "false"},
     )
     yield s
+
+
+@pytest.fixture()
+def jobs_launched(spark):
+    """``with jobs_launched() as n: ...`` leaves in ``n[0]`` the number of
+    Spark jobs the block launched, counted through a job group."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    @contextlib.contextmanager
+    def count():
+        group = f"jobs-launched-{next(groups)}"
+        out: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield out
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return count
 
 
 CLOCK = datetime(2025, 6, 1, 12, 0, 0)

@@ -197,3 +197,18 @@ def test_rebuild_reuse_sets_identical_and_sets_untouched(spark, wh, tmp_path):
         tuple(r) for r in spark.table("s_idx_bands").collect()
     }
     assert got_bands == want_bands
+
+
+def test_reuse_sets_refuses_docs(spark, wh):
+    """A reuse rebuild reads no text, so a docs frame passed with
+    reuse_sets=True would be silently ignored — it is refused instead,
+    before the stored index is touched."""
+    docs = spark.createDataFrame(_corpus(n_docs=12), "doc_id long, text string")
+    build_minhash_index(wh, docs, name="u_idx", **KNOBS)
+    before = sorted(tuple(r) for r in spark.table("u_idx_docs").collect())
+    with pytest.raises(ValueError, match="docs=None"):
+        build_minhash_index(
+            wh, docs, name="u_idx", reuse_sets=True,
+            **dict(KNOBS, num_hashes=16, bands=4),
+        )
+    assert sorted(tuple(r) for r in spark.table("u_idx_docs").collect()) == before

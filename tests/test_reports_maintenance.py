@@ -6,7 +6,7 @@ from datetime import datetime, timezone
 
 import pytest
 
-from global_seismic_data_pipeline_spark.pipeline import maintenance, reports
+from global_seismic_data_pipeline_spark.pipeline import gold, maintenance, reports
 from global_seismic_data_pipeline_spark.pipeline.runner import build_pipeline
 from global_seismic_data_pipeline_spark.sources.warehouse import Warehouse
 
@@ -113,6 +113,25 @@ def test_dashboard_renders_all_sections(spark, warehouse, tmp_path):
     assert '<div class="num">4</div>' in page
     assert ">7.3<" in page
     assert "rendered 2025-06-01 12:00 UTC" in page
+
+
+def test_second_dashboard_page_skips_schema_inference(spark, warehouse, jobs_launched):
+    """An unchanged warehouse re-renders without re-inferring its tables'
+    schemas: 9 of the page's ~22 jobs were inference (Warehouse.read)."""
+    from global_seismic_data_pipeline_spark.pipeline import dashboard
+
+    first = dashboard.render_dashboard(warehouse, clock=CLOCK)
+    with jobs_launched() as jobs:
+        second = dashboard.render_dashboard(warehouse, clock=CLOCK)
+    assert second == first
+    assert jobs[0] <= 14
+
+
+def test_run_gold_counts_equal_table_counts(spark, warehouse):
+    counts = gold.run_gold(warehouse, clock=CLOCK)
+    assert set(counts) == set(gold.GOLD_TABLES + gold.PHYSICS_TABLES)
+    for t, n in counts.items():
+        assert n == warehouse.read(t).count(), t
 
 
 def test_dashboard_escapes_markup(spark, tmp_path):

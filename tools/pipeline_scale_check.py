@@ -8,12 +8,13 @@ Usage: python tools/pipeline_scale_check.py [sf_dir] [warehouse_dir]
 from __future__ import annotations
 
 import shutil
+import os
 import sys
 import tempfile
 import time
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

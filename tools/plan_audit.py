@@ -10,9 +10,10 @@ Usage: python tools/plan_audit.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as ent
 from global_seismic_data_pipeline_spark.session import get_spark
