@@ -4,7 +4,7 @@ The classic ΔQ pattern (self-maintainable aggregate views, as in
 materialized-view maintenance literature and Delta Live Tables'
 incremental aggregates): a grouped COUNT/SUM view over a versioned table
 is kept current by applying each commit's ROW DELTAS — obtained from
-:meth:`sources.versioned.VersionedWarehouse.table_changes` — instead of
+:meth:`sources.deltawh.DeltaLogWarehouse.table_changes` — instead of
 rescanning the base table. Each change row carries a sign (+1 for
 ``insert`` / ``update_postimage``, −1 for ``delete`` /
 ``update_preimage``), so a commit's net effect per group is one small
@@ -27,7 +27,7 @@ are REMOVED — the view equals the from-scratch aggregate exactly, which
 the ``ivm_orders_by_status`` driver oracle pins bit-for-bit
 (incremental ≡ recompute).
 
-Crash discipline: the view lives in the SAME VersionedWarehouse, so a
+Crash discipline: the view lives in the SAME DeltaLogWarehouse, so a
 refresh (a) reads the view AT the version recorded in
 ``{view}__ivm_meta`` — never the live table, (b) applies the feed delta
 and commits the new view state, (c) writes meta LAST. A crash between
@@ -50,7 +50,7 @@ from functools import reduce
 
 from pyspark.sql import functions as F
 
-from ..sources.versioned import VersionedWarehouse
+from ..sources.deltawh import DeltaLogWarehouse
 
 META_SUFFIX = "__ivm_meta"
 _META_SCHEMA = (
@@ -110,7 +110,7 @@ def _nullsafe_key_cond(left, right, keys, rprefix: str):
 
 
 def _write_meta(
-    wh: VersionedWarehouse, view: str, source: str,
+    wh: DeltaLogWarehouse, view: str, source: str,
     keys_json: str, aggs_json: str, last_version: int, view_version: int,
 ) -> None:
     from ..session import tiny_df
@@ -124,7 +124,7 @@ def _write_meta(
 
 
 def define_agg_view(
-    wh: VersionedWarehouse,
+    wh: DeltaLogWarehouse,
     source: str,
     view: str,
     keys: Sequence[str],
@@ -152,7 +152,7 @@ def define_agg_view(
     return at
 
 
-def refresh_agg_view(wh: VersionedWarehouse, view: str) -> dict:
+def refresh_agg_view(wh: DeltaLogWarehouse, view: str) -> dict:
     """Apply every source commit AFTER the view's high-water mark via the
     change data feed — O(Δ) work, never a base-table rescan. Returns
     {from_version, to_version, groups_changed}; a no-op refresh (no new

@@ -2506,35 +2506,45 @@ def csv_parse_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cdf_order_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Change data feed on the versioned warehouse
-    (sources/versioned.py table_changes — Delta's
-    ``table_changes(name, from_v, to_v)``): v1 seeds a subset of orders,
-    v2 MERGEs updated+new rows, v3 deletes a band; the feed over commits
-    2..3 must report exactly the per-commit row deltas with Delta's
+    """Change data feed on the Delta warehouse WITHOUT
+    ``delta.enableChangeDataFeed`` (sources/deltawh.py table_changes —
+    Delta's ``table_changes(name, from_v, to_v)`` served by the keyed
+    snapshot diff, the path :func:`delta_cdf_file_orders` never takes):
+    a seed commit lands a subset of orders, a MERGE updates+inserts,
+    and an overwrite deletes a band; the feed over the MERGE and delete
+    commits must report exactly the per-commit row deltas with Delta's
     change vocabulary. The oracle recomputes the diffs set-theoretically
     from the same deterministic version definitions — a wrong pre/post
     pairing, a missed delete, or a phantom change for an untouched row
-    all hash-fail."""
+    all hash-fail. Versions are normalized (merge → 2, delete → 3) so
+    the oracle replays literals."""
     import tempfile
 
-    from ..sources.versioned import VersionedWarehouse
+    from ..sources.deltawh import DeltaLogWarehouse
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
-    wh = VersionedWarehouse(spark, tempfile.mkdtemp(prefix="cdf-"))
-    wh.overwrite(orders.filter(F.col("o_orderkey") % 10 < 5), "ord")  # v1
+    wh = DeltaLogWarehouse(spark, tempfile.mkdtemp(prefix="cdf-"))
+    wh.overwrite(orders.filter(F.col("o_orderkey") % 10 < 5), "ord")
     updates = orders.filter(
         (F.col("o_orderkey") % 10 >= 3) & (F.col("o_orderkey") % 10 <= 6)
     ).select(
         "o_orderkey", (F.col("o_custkey") + 1000000).alias("o_custkey")
     )
-    wh.merge(updates, "ord", ["o_orderkey"])                           # v2
+    wh.merge(updates, "ord", ["o_orderkey"])
+    v_merge = wh.latest_version("ord")
     wh.overwrite(
         wh.read("ord").filter(F.col("o_orderkey") % 10 != 0), "ord"
-    )                                                                  # v3
-    return wh.table_changes("ord", 2, 3, keys=["o_orderkey"]).select(
-        "o_orderkey", "o_custkey", "_change_type", "_commit_version"
+    )
+    v_del = wh.latest_version("ord")
+    return wh.table_changes("ord", v_merge, v_del, keys=["o_orderkey"]).select(
+        "o_orderkey",
+        "o_custkey",
+        "_change_type",
+        (F.col("_commit_version") - F.lit(v_merge) + F.lit(2))
+        .cast("long")
+        .alias("_commit_version"),
     )
 
 
@@ -2571,23 +2581,24 @@ def bloom_point_lookup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ivm_orders_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance over the change data feed
-    (operators/ivm.py): a count+sum view by o_orderstatus is defined at
-    v1, then two commits land (the cdf_order_changes scenario: a MERGE
-    updating+inserting, then a band delete) and ONE O(Δ) refresh applies
-    both via table_changes — no base-table rescan. The oracle recomputes
-    the aggregate from the final deterministic state, so any signed-delta
-    slip (double-applied update, missed delete, undead group)
-    hash-fails: incremental ≡ recompute, bit-for-bit in LONG."""
+    (operators/ivm.py) on the Delta warehouse: a count+sum view by
+    o_orderstatus is defined at v0, then two commits land (the
+    cdf_order_changes scenario: a MERGE updating+inserting, then a band
+    delete) and ONE O(Δ) refresh applies both via table_changes — no
+    base-table rescan. The oracle recomputes the aggregate from the
+    final deterministic state, so any signed-delta slip (double-applied
+    update, missed delete, undead group) hash-fails: incremental ≡
+    recompute, bit-for-bit in LONG."""
     import tempfile
 
     from ..operators import ivm
-    from ..sources.versioned import VersionedWarehouse
+    from ..sources.deltawh import DeltaLogWarehouse
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_custkey"
     )
-    wh = VersionedWarehouse(spark, tempfile.mkdtemp(prefix="ivm-"))
-    wh.overwrite(orders.filter(F.col("o_orderkey") % 10 < 5), "ord")  # v1
+    wh = DeltaLogWarehouse(spark, tempfile.mkdtemp(prefix="ivm-"))
+    wh.overwrite(orders.filter(F.col("o_orderkey") % 10 < 5), "ord")  # v0
     ivm.define_agg_view(
         wh, "ord", "ord_by_status", ["o_orderstatus"],
         {"n_orders": ("count", None), "sum_custkey": ("sum", "o_custkey")},
@@ -2598,10 +2609,10 @@ def ivm_orders_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus",
         (F.col("o_custkey") + 1000000).alias("o_custkey"),
     )
-    wh.merge(updates, "ord", ["o_orderkey"])                           # v2
+    wh.merge(updates, "ord", ["o_orderkey"])                           # v1
     wh.overwrite(
         wh.read("ord").filter(F.col("o_orderkey") % 10 != 0), "ord"
-    )                                                                  # v3
+    )                                                                  # v2
     ivm.refresh_agg_view(wh, "ord_by_status")
     return wh.read("ord_by_status").select(
         "o_orderstatus", "n_orders", "sum_custkey"

@@ -3407,9 +3407,10 @@ def table_changes_from_log(
     - dataChange=false only (OPTIMIZE) / metadata-only → no rows.
 
     Output: table columns + ``_change_type``, ``_commit_version``,
-    ``_commit_timestamp_ms`` — same vocabulary as the versioned
-    backend's snapshot-diff ``table_changes``. Each commit is one
-    column-pruned parquet scan; consume incrementally at 100 TB."""
+    ``_commit_timestamp_ms`` — same vocabulary as the snapshot diff
+    ``DeltaLogWarehouse.table_changes`` serves for non-CDF tables. Each
+    commit is one column-pruned parquet scan; consume incrementally at
+    100 TB."""
     from functools import reduce
 
     from pyspark.sql import functions as F

@@ -21,10 +21,10 @@ Semantics differences from the rename-swap backends, all Delta-native:
   file-level rewrite Delta's MERGE does, atomic at the log level (readers
   see the old or the new snapshot, never a mix, because visibility is the
   single put-if-absent JSON publish).
-- **time travel / history / restore come from the log itself** (no
-  hardlink snapshot sidecar needed): ``read_version`` replays the log at V,
-  ``restore`` commits removes(current)+adds(files of V) — Delta RESTORE's
-  append-only history.
+- **time travel / history / restore come from the log itself**:
+  ``read_version`` replays the log at V, ``restore`` commits
+  removes(current)+adds(files of V) — Delta RESTORE's append-only
+  history.
 """
 
 from __future__ import annotations
@@ -1296,8 +1296,8 @@ class DeltaLogWarehouse(Warehouse):
         return dl.vacuum_delta(self.path(name), retain_hours=retain_hours)
 
     def vacuum_snapshots(self, name: str, *, keep_last: int = 2) -> list[int]:
-        """Delta log cleanup with the versioned backend's contract: keep
-        the newest ``keep_last`` versions time-travelable. Checkpoints the
+        """Delta log cleanup by version count: keep the newest
+        ``keep_last`` versions time-travelable. Checkpoints the
         anchor version, then drops older commit JSONs (their data files
         stay until :meth:`vacuum`'s retention window passes)."""
         if keep_last < 1:
@@ -1314,32 +1314,161 @@ class DeltaLogWarehouse(Warehouse):
         return dropped
 
     def table_changes(
-        self, name, from_version, to_version=None, *, keys=None
-    ):
-        """Change data feed. On a delta.enableChangeDataFeed=true
-        table: the FILE-BASED spec path — cdc actions' _change_data
-        files (foreign writers' included) are the change set, adds
-        derive inserts, remove-only commits derive deletes; update
-        pre/postimage pairing comes from the files, no keys needed.
-        Other tables fall back to the snapshot-diff implementation
-        (identical vocabulary), which programs only against
-        versions()/history()/read_version()."""
+        self,
+        name: str,
+        from_version: int,
+        to_version: int | None = None,
+        *,
+        keys: Sequence[str] | None = None,
+    ) -> DataFrame:
+        """Change data feed (Delta: ``table_changes(name, from_v, to_v)``):
+        row-level deltas of every commit in ``[from_version, to_version]``
+        (``to_version`` defaults to the latest). Output = the table's
+        columns plus ``_change_type`` (``insert`` / ``delete`` /
+        ``update_preimage`` / ``update_postimage``), ``_commit_version``
+        and ``_commit_timestamp_ms``.
+
+        On a ``delta.enableChangeDataFeed=true`` table this is the
+        FILE-BASED spec path: cdc actions' ``_change_data`` files (foreign
+        writers' included) are the change set, adds derive inserts,
+        remove-only commits derive deletes; update pre/postimage pairing
+        comes from the files, so ``keys`` is not needed. Other tables get
+        the same vocabulary from :meth:`_snapshot_table_changes`, which
+        diffs time-travel snapshots."""
         if self._cdf_enabled(name):
             return dl.table_changes_from_log(
                 self.spark, self.path(name), from_version, to_version
             )
-        from .versioned import VersionedWarehouse
+        return self._snapshot_table_changes(
+            name, from_version, to_version, keys=keys
+        )
 
-        return VersionedWarehouse.table_changes(
-            self, name, from_version, to_version, keys=keys
+    def _snapshot_table_changes(
+        self,
+        name: str,
+        from_version: int,
+        to_version: int | None,
+        *,
+        keys: Sequence[str] | None,
+    ) -> DataFrame:
+        """Snapshot-diff change feed for tables without CDF files: each
+        commit v is diffed against its nearest RETAINED predecessor
+        (normally v-1; after :meth:`vacuum_snapshots` the diff spans the
+        gap; the first retained commit diffs against empty, so it reports
+        its rows as inserts). ``_commit_timestamp_ms`` comes from the
+        commit record.
+
+        With ``keys``, adjacent snapshots full-outer-join null-safely on
+        the keys: key only in new → insert, only in old → delete, in both
+        with any non-key change (null-safe struct compare) → a
+        preimage/postimage pair — Delta CDF's exact row vocabulary.
+        Without ``keys`` rows diff by WHOLE-ROW multiset (``exceptAll``
+        both ways): inserts/deletes only, a modified row appearing as
+        delete+insert (no update pairing without identity).
+
+        Scale: one keyed shuffle join per commit over two snapshots —
+        the same cost class as the MERGE that produced the commit; at
+        100 TB consume the feed incrementally (one commit per run), not
+        as a deep history scan."""
+        from functools import reduce
+
+        from pyspark.sql import functions as F
+
+        vs = self.versions(name)
+        if not vs:
+            raise ValueError(f"{name}: no committed versions")
+        to_version = vs[-1] if to_version is None else to_version
+        wanted = [v for v in vs if from_version <= v <= to_version]
+        if not wanted:
+            raise ValueError(
+                f"{name}: no commits in [{from_version}, {to_version}] "
+                f"(log has {vs})"
+            )
+        records = {r["version"]: r for r in self.history(name)}
+
+        def prev_snapshot(v: int) -> DataFrame:
+            older = [x for x in vs if x < v]
+            if older:
+                return self.read_version(name, older[-1])
+            schema = self.read_version(name, v).schema
+            return self.spark.createDataFrame([], schema)
+
+        def one_commit(v: int) -> DataFrame:
+            old, new = prev_snapshot(v), self.read_version(name, v)
+            cols = new.columns
+            if keys:
+                key_list = list(keys)
+                val_cols = [c for c in cols if c not in key_list]
+                o = old.select(
+                    *[F.col(k).alias(f"__ko_{k}") for k in key_list],
+                    F.struct(*cols).alias("__o"),
+                )
+                n = new.select(
+                    *[F.col(k).alias(f"__kn_{k}") for k in key_list],
+                    F.struct(*cols).alias("__n"),
+                )
+                cond = reduce(
+                    lambda a, b: a & b,
+                    [
+                        F.col(f"__ko_{k}").eqNullSafe(F.col(f"__kn_{k}"))
+                        for k in key_list
+                    ],
+                )
+                j = o.join(n, cond, "full_outer")
+                has_o, has_n = F.col("__o").isNotNull(), F.col("__n").isNotNull()
+                # null-safe VALUE compare: identical rows emit nothing
+                same_vals = (
+                    F.struct(*[F.col(f"__o.{c}") for c in val_cols]).eqNullSafe(
+                        F.struct(*[F.col(f"__n.{c}") for c in val_cols])
+                    )
+                    if val_cols
+                    else F.lit(True)
+                )
+
+                def rows(side: str, tag: str, pred):
+                    return j.filter(pred).select(
+                        *[F.col(f"__{side}.{c}").alias(c) for c in cols],
+                        F.lit(tag).alias("_change_type"),
+                    )
+
+                out = (
+                    rows("n", "insert", ~has_o & has_n)
+                    .unionByName(rows("o", "delete", has_o & ~has_n))
+                    .unionByName(
+                        rows("o", "update_preimage", has_o & has_n & ~same_vals)
+                    )
+                    .unionByName(
+                        rows("n", "update_postimage", has_o & has_n & ~same_vals)
+                    )
+                )
+            else:
+                out = new.exceptAll(old).select(
+                    *cols, F.lit("insert").alias("_change_type")
+                ).unionByName(
+                    old.exceptAll(new).select(
+                        *cols, F.lit("delete").alias("_change_type")
+                    )
+                )
+            rec = records[v]
+            return out.select(
+                *cols,
+                "_change_type",
+                F.lit(v).cast("long").alias("_commit_version"),
+                F.lit(rec["timestamp_ms"]).cast("long").alias(
+                    "_commit_timestamp_ms"
+                ),
+            )
+
+        return reduce(
+            lambda a, b: a.unionByName(b), [one_commit(v) for v in wanted]
         )
 
     def clone(self, src: str, dst: str) -> int:
         """Delta SHALLOW CLONE at the wire-format level: ``dst`` starts a
         NEW log whose add actions reference ``src``'s active files by
-        ABSOLUTE path (zero data copied — the real clone mechanism, not a
-        hardlink emulation). Future writes to either table stage their own
-        files; vacuuming the clone never deletes outside its root."""
+        ABSOLUTE path (zero data copied — the real clone mechanism).
+        Future writes to either table stage their own files; vacuuming
+        the clone never deletes outside its root."""
         import json as _json
         import time as _time
         import uuid as _uuid

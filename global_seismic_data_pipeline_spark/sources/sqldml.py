@@ -57,7 +57,7 @@ Supported grammar (case-insensitive keywords):
   column names — ``numFiles`` etc., :23-26), ``ANALYZE TABLE <tbl>
   COMPUTE STATISTICS`` (:119-124, also refreshing the engine's stored
   join-planning stats), ``VACUUM <tbl> [RETAIN n HOURS]`` (:136-144).
-  On the versioned backend additionally ``DESCRIBE HISTORY <tbl>``,
+  On the Delta-log backend additionally ``DESCRIBE HISTORY <tbl>``,
   ``RESTORE TABLE <tbl> TO VERSION AS OF n``, ``SELECT … FROM <tbl>
   VERSION AS OF n`` and ``SELECT … FROM table_changes('<tbl>', a[, b])``
   (keyless change feed: updates surface as delete+insert pairs).
@@ -417,13 +417,13 @@ class SqlDml:
     # -- Delta operational SQL (TABLE OPTIMIZATION.py verbatim flow) ------
     def _versioned(self, feature: str):
         # capability check, not a class check: any backend with a commit
-        # log qualifies — VersionedWarehouse (hardlink snapshots) and
-        # DeltaLogWarehouse (real _delta_log) both serve the full surface
+        # log qualifies — DeltaLogWarehouse (real _delta_log) serves the
+        # full surface
         if not (hasattr(self.wh, "read_version") and hasattr(self.wh, "history")):
             raise ValueError(
                 f"{feature} needs a commit-log warehouse backend "
-                "(VersionedWarehouse or DeltaLogWarehouse) — the plain "
-                "warehouse keeps no commit log"
+                "(DeltaLogWarehouse) — the plain warehouse keeps no "
+                "commit log"
             )
         return self.wh
 
@@ -582,11 +582,12 @@ class SqlDml:
 
     def _vacuum(self, text: str) -> DataFrame:
         """``VACUUM t [RETAIN n HOURS]`` (TABLE OPTIMIZATION.py:136-144).
-        Maps to staging/trash cleanup plus, on the versioned backend,
-        snapshot retention (old snapshots dropped; hardlinks keep live
-        data safe by construction). RETAIN n HOURS is accepted and
-        recorded; snapshot retention is count-based (keep_last=2) since
-        commit timestamps, not file mtimes, define our retention."""
+        Maps to staging/trash cleanup plus, on the Delta-log backend,
+        log retention (the newest two versions stay time-travelable;
+        older commit JSONs fold into a checkpoint, their data files stay
+        on disk). RETAIN n HOURS is accepted and recorded; log retention
+        is count-based (keep_last=2) since commit timestamps, not file
+        mtimes, define our retention."""
         m = _mask_match(_VACUUM_RE, text)
         if not m:
             raise ValueError(f"unsupported VACUUM syntax: {text!r}")
@@ -633,7 +634,7 @@ class SqlDml:
     def _describe(self, text: str) -> DataFrame:
         """``DESCRIBE DETAIL t`` (Delta column names — the reference
         selects ``numFiles``, TABLE OPTIMIZATION.py:23-26) and
-        ``DESCRIBE HISTORY t`` (versioned backend)."""
+        ``DESCRIBE HISTORY t`` (Delta-log backend)."""
         m = _mask_match(_DESCRIBE_RE, text)
         if not m:
             raise ValueError(f"unsupported DESCRIBE syntax: {text!r}")
@@ -900,8 +901,8 @@ class SqlDml:
         storage layer — the reference's ``USING DELTA`` runs verbatim)."""
         cm = _mask_match(_CLONE_RE, text)
         if cm:
-            # Delta: CREATE TABLE dst SHALLOW CLONE src — hardlink-copy
-            # of the source's current files, own commit log from v1
+            # Delta: CREATE TABLE dst SHALLOW CLONE src — a new log that
+            # references the source's current files, own history from v0
             wh = self._versioned("SHALLOW CLONE")
             if wh.exists(cm["target"]) and cm["ifnot"]:
                 return self._summary(

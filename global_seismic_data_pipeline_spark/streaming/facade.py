@@ -631,7 +631,7 @@ def materialized_view_sink(
     version_col: str | None = None,
 ) -> DataStreamWriter:
     """Streaming MERGE + continuous incremental view maintenance: each
-    micro-batch (a) MERGEs into a VERSIONED warehouse table — one commit
+    micro-batch (a) MERGEs into a Delta warehouse table — one commit
     per batch — then (b) rolls every listed ``operators.ivm`` aggregate
     view forward through the change data feed of exactly that commit.
     The streaming form of Delta Live Tables' incremental aggregates:
@@ -648,18 +648,18 @@ def materialized_view_sink(
     .sparkSession`` (foreachBatch hands a CLONED session — module rule)."""
     from ..operators import dedup as dedup_ops
     from ..operators import ivm
-    from ..sources.versioned import VersionedWarehouse
+    from ..sources.deltawh import DeltaLogWarehouse
 
-    if not isinstance(wh, VersionedWarehouse):
+    if not isinstance(wh, DeltaLogWarehouse):
         raise ValueError(
-            "materialized_view_sink needs a VersionedWarehouse — the "
-            "view refresh consumes the commit log's change data feed"
+            "materialized_view_sink needs a DeltaLogWarehouse — the "
+            "view refresh consumes the Delta log's change data feed"
         )
 
     def batch_fn(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        bwh = VersionedWarehouse(batch_df.sparkSession, wh.root, wh.fmt)
+        bwh = DeltaLogWarehouse(batch_df.sparkSession, wh.root)
         if version_col is not None:
             unique = dedup_ops.keep_latest(batch_df, keys, version_col)
         else:

@@ -247,13 +247,13 @@ def test_overwrite_dynamic_file_level(spark, iwh):
 
 
 def test_overwrite_dynamic_versioned_commits(spark, tmp_path):
-    """The versioned backend records a dynamic overwrite as a commit —
+    """The Delta backend records a dynamic overwrite as ONE commit —
     time travel sees the pre-replace state."""
-    from global_seismic_data_pipeline_spark.sources.versioned import (
-        VersionedWarehouse,
+    from global_seismic_data_pipeline_spark.sources.deltawh import (
+        DeltaLogWarehouse,
     )
 
-    wh = VersionedWarehouse(spark, str(tmp_path / "vwh"))
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "vwh"))
     wh.overwrite(
         spark.createDataFrame([(1, "A"), (2, "B")], "k int, band string"),
         "t", ["band"],

@@ -7,12 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from global_seismic_data_pipeline_spark.operators import ivm
-from global_seismic_data_pipeline_spark.sources.versioned import VersionedWarehouse
+from global_seismic_data_pipeline_spark.sources.deltawh import DeltaLogWarehouse
 
 
 @pytest.fixture()
 def wh(spark, tmp_path):
-    return VersionedWarehouse(spark, str(tmp_path / "wh"))
+    return DeltaLogWarehouse(spark, str(tmp_path / "wh"))
 
 
 def _df(spark, rows):
@@ -39,17 +39,17 @@ AGGS = {"n": ("count", None), "sv": ("sum", "v")}
 
 def test_refresh_equals_recompute_across_commit_types(spark, wh):
     wh.overwrite(_df(spark, [("a", "g1", 1), ("b", "g1", 2), ("c", "g2", 3)]), "t")
-    assert ivm.define_agg_view(wh, "t", "tv", ["grp"], AGGS) == 1
+    assert ivm.define_agg_view(wh, "t", "tv", ["grp"], AGGS) == 0
     assert _view(wh) == _recompute(wh)
 
-    # commit 2: MERGE (update b, insert d into a NEW group)
+    # commit 1: MERGE (update b, insert d into a NEW group)
     wh.merge(_df(spark, [("b", "g1", 20), ("d", "g3", 4)]), "t", ["k"])
     out = ivm.refresh_agg_view(wh, "tv")
-    assert (out["from_version"], out["to_version"]) == (2, 2)
+    assert (out["from_version"], out["to_version"]) == (1, 1)
     assert out["groups_changed"] == 2  # g1 (update), g3 (birth)
     assert _view(wh) == _recompute(wh)
 
-    # commit 3: delete ALL of g2 → the group must vanish from the view
+    # commit 2: delete ALL of g2 → the group must vanish from the view
     wh.overwrite(wh.read("t").filter(F.col("grp") != "g2"), "t")
     ivm.refresh_agg_view(wh, "tv")
     got = _view(wh)
@@ -65,11 +65,11 @@ def test_refresh_equals_recompute_across_commit_types(spark, wh):
 def test_multi_commit_catchup_single_refresh(spark, wh):
     wh.overwrite(_df(spark, [("a", "g1", 1)]), "t")
     ivm.define_agg_view(wh, "t", "tv", ["grp"], AGGS)
-    wh.append(_df(spark, [("b", "g1", 2)]), "t")          # v2
-    wh.append(_df(spark, [("c", "g2", 5)]), "t")          # v3
-    wh.merge(_df(spark, [("a", "g1", 100)]), "t", ["k"])  # v4
+    wh.append(_df(spark, [("b", "g1", 2)]), "t")          # v1
+    wh.append(_df(spark, [("c", "g2", 5)]), "t")          # v2
+    wh.merge(_df(spark, [("a", "g1", 100)]), "t", ["k"])  # v3
     out = ivm.refresh_agg_view(wh, "tv")
-    assert (out["from_version"], out["to_version"]) == (2, 4)
+    assert (out["from_version"], out["to_version"]) == (1, 3)
     assert _view(wh) == _recompute(wh) == [("g1", 2, 102), ("g2", 1, 5)]
 
 
@@ -90,8 +90,8 @@ def test_crash_replay_is_idempotent_in_effect(spark, wh):
         .coalesce(1),
         f"tv{ivm.META_SUFFIX}",
     )
-    out = ivm.refresh_agg_view(wh, "tv")  # re-applies commit 2
-    assert out["to_version"] == 2
+    out = ivm.refresh_agg_view(wh, "tv")  # re-applies commit 1
+    assert out["to_version"] == 1
     assert _view(wh) == expected == _recompute(wh)  # NOT double-counted
 
 

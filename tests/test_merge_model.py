@@ -6,11 +6,11 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 
 import pytest
 
+from global_seismic_data_pipeline_spark.sources.deltawh import DeltaLogWarehouse
 from global_seismic_data_pipeline_spark.sources.warehouse import Warehouse
-from global_seismic_data_pipeline_spark.sources.versioned import VersionedWarehouse
 
 
-@pytest.fixture(params=[Warehouse, VersionedWarehouse], ids=["plain", "versioned"])
+@pytest.fixture(params=[Warehouse, DeltaLogWarehouse], ids=["plain", "delta"])
 def wh_cls(request):
     return request.param
 

@@ -133,7 +133,7 @@ def test_scd2_apply_changes_equals_full_build(spark):
 
 def test_scd2_apply_changes_from_cdf(spark, tmp_path):
     """The change-data feed drives the incremental SCD2 maintenance:
-    MERGE commits on a versioned table, table_changes() between the
+    MERGE commits on a Delta table, table_changes() between the
     snapshots becomes the apply batch, and the maintained history
     equals a from-scratch build over the final snapshot's change
     stream."""
@@ -143,11 +143,11 @@ def test_scd2_apply_changes_from_cdf(spark, tmp_path):
         scd2_apply_changes,
         scd2_build,
     )
-    from global_seismic_data_pipeline_spark.sources.versioned import (
-        VersionedWarehouse,
+    from global_seismic_data_pipeline_spark.sources.deltawh import (
+        DeltaLogWarehouse,
     )
 
-    wh = VersionedWarehouse(spark, str(tmp_path / "wh"))
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
     t = lambda d: datetime(2024, 2, d)
     schema = "user_id long, ts timestamp, value double"
     batch1 = spark.createDataFrame(
@@ -158,7 +158,7 @@ def test_scd2_apply_changes_from_cdf(spark, tmp_path):
     kw = dict(key_cols=["user_id"], ts_col="ts", attr_cols=["value"])
     # pin the history to the committed snapshot: the live path's files
     # are rewritten by the MERGE below, and a lazy plan over them would
-    # dangle (time travel is the point of the versioned store)
+    # dangle (time travel is the point of the Delta log)
     hist = scd2_build(wh.read_version("chg", v1), **kw)
 
     batch2 = spark.createDataFrame(

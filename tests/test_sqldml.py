@@ -555,38 +555,34 @@ def test_reference_table_optimization_flow_verbatim(spark, wh):
 
 def test_versioned_sql_surface(spark, tmp_path):
     """DESCRIBE HISTORY / RESTORE / VERSION AS OF / table_changes() on
-    the versioned backend; each refuses cleanly on the plain backend."""
-    from global_seismic_data_pipeline_spark.sources.versioned import (
-        VersionedWarehouse,
-    )
-
-    vwh = VersionedWarehouse(spark, str(tmp_path / "vwh"))
+    the Delta backend; each refuses cleanly on the plain backend."""
+    vwh = DeltaLogWarehouse(spark, str(tmp_path / "vwh"))
     engine = SqlDml(vwh)
     vwh.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "k int, s string"), "t")
     vwh.overwrite(spark.createDataFrame([(1, "a2"), (3, "c")], "k int, s string"), "t")
 
     hist = engine.sql("DESCRIBE HISTORY t").collect()
-    assert [r.version for r in hist] == [2, 1]
-    assert {r.operation for r in hist} == {"overwrite"}
+    assert [r.version for r in hist] == [1, 0]
+    assert {r.operation for r in hist} == {"WRITE"}
 
-    old = engine.sql("SELECT k, s FROM t VERSION AS OF 1 ORDER BY k").collect()
+    old = engine.sql("SELECT k, s FROM t VERSION AS OF 0 ORDER BY k").collect()
     assert [(r.k, r.s) for r in old] == [(1, "a"), (2, "b")]
 
     ch = engine.sql(
-        "SELECT _change_type, k FROM table_changes('t', 2, 2) ORDER BY _change_type, k"
+        "SELECT _change_type, k FROM table_changes('t', 1, 1) ORDER BY _change_type, k"
     ).collect()
     # keyless feed: the update of k=1 surfaces as delete+insert
     assert [(r._change_type, r.k) for r in ch] == [
         ("delete", 1), ("delete", 2), ("insert", 1), ("insert", 3),
     ]
 
-    engine.sql("RESTORE TABLE t TO VERSION AS OF 1")
+    engine.sql("RESTORE TABLE t TO VERSION AS OF 0")
     assert {r.s for r in vwh.read("t").collect()} == {"a", "b"}
-    assert engine.sql("DESCRIBE HISTORY t").collect()[0].operation.startswith("restore(")
+    assert engine.sql("DESCRIBE HISTORY t").collect()[0].operation == "RESTORE"
 
     # DESCRIBE DETAIL carries the current version on this backend
     det = engine.sql("DESCRIBE DETAIL t").collect()[0]
-    assert det.version == 3 and det.numFiles >= 1
+    assert det.version == 2 and det.numFiles >= 1
 
     # plain backend: versioned features refuse loudly
     plain = SqlDml(Warehouse(spark, str(tmp_path / "pwh")))
@@ -687,31 +683,27 @@ def test_delete_partition_pruned_rewrite(spark, wh):
 
 def test_partitioned_dml_commits_on_versioned_backend(spark, tmp_path):
     """A pruned UPDATE/DELETE is a mutation like any other: on the
-    versioned backend it must land in the commit log (time travel + the
+    Delta backend it must land in the commit log (time travel + the
     change data feed see it)."""
-    from global_seismic_data_pipeline_spark.sources.versioned import (
-        VersionedWarehouse,
-    )
-
-    vwh = VersionedWarehouse(spark, str(tmp_path / "vwh"))
+    vwh = DeltaLogWarehouse(spark, str(tmp_path / "vwh"))
     engine = SqlDml(vwh)
     vwh.overwrite(
         spark.createDataFrame(
             [("d1", 1, 10), ("d2", 2, 20)], "day string, k int, v int"
         ),
         "p", partition_by=["day"],
-    )                                                             # v1
-    engine.sql("UPDATE p SET v = 99 WHERE day = 'd1'")            # v2
-    engine.sql("DELETE FROM p WHERE day = 'd2'")                  # v3
-    assert vwh.versions("p") == [1, 2, 3]
-    ch = vwh.table_changes("p", 2, 3, keys=["k"])
+    )                                                             # v0
+    engine.sql("UPDATE p SET v = 99 WHERE day = 'd1'")            # v1
+    engine.sql("DELETE FROM p WHERE day = 'd2'")                  # v2
+    assert vwh.versions("p") == [0, 1, 2]
+    ch = vwh.table_changes("p", 1, 2, keys=["k"])
     got = sorted((r._commit_version, r._change_type, r.k) for r in ch.collect())
     assert got == [
-        (2, "update_postimage", 1), (2, "update_preimage", 1),
-        (3, "delete", 2),
+        (1, "update_postimage", 1), (1, "update_preimage", 1),
+        (2, "delete", 2),
     ]
     # time travel still sees the pre-update value
-    assert vwh.read_version("p", 1).filter("k = 1").collect()[0].v == 10
+    assert vwh.read_version("p", 0).filter("k = 1").collect()[0].v == 10
 
 
 def test_merge_auto_prunes_partitioned_target(spark, wh):
@@ -745,35 +737,58 @@ def test_merge_auto_prunes_partitioned_target(spark, wh):
 
 
 def test_timestamp_as_of_and_shallow_clone_sql(spark, tmp_path):
-    from global_seismic_data_pipeline_spark.sources.versioned import (
-        VersionedWarehouse,
-    )
-
-    ticks = iter(range(1, 10))
-    vwh = VersionedWarehouse(spark, str(tmp_path / "vwh"))
+    vwh = DeltaLogWarehouse(spark, str(tmp_path / "vwh"))
     engine = SqlDml(vwh)
-    vwh.overwrite(spark.createDataFrame([(1,)], "k int"), "t")   # v1
-    vwh.overwrite(spark.createDataFrame([(2,)], "k int"), "t")   # v2
+    vwh.overwrite(spark.createDataFrame([(1,)], "k int"), "t")   # v0
+    vwh.overwrite(spark.createDataFrame([(2,)], "k int"), "t")   # v1
     hist = {h["version"]: h["timestamp_ms"] for h in vwh.history("t")}
 
     # TIMESTAMP AS OF between/at commit times resolves to the right snapshot
     got = engine.sql(
         "SELECT k FROM t TIMESTAMP AS OF "
-        f"'{__import__('datetime').datetime.utcfromtimestamp(hist[1] / 1000).isoformat()}'"
+        f"'{__import__('datetime').datetime.utcfromtimestamp(hist[0] / 1000).isoformat()}'"
     ).collect()
     assert [r.k for r in got] == [1]
     with pytest.raises(ValueError, match="no commit at or before"):
         engine.sql("SELECT k FROM t TIMESTAMP AS OF '1999-01-01T00:00:00'")
 
-    # SHALLOW CLONE: zero-copy, immediately independent, own log at v1
+    # SHALLOW CLONE: zero-copy, immediately independent, own log at v0
     out = engine.sql("CREATE TABLE t2 SHALLOW CLONE t").collect()[0]
-    assert (out.statement, out.version) == ("CLONE", 1)
+    assert (out.statement, out.version) == ("CLONE", 0)
     assert [r.k for r in vwh.read("t2").collect()] == [2]
     vwh.overwrite(spark.createDataFrame([(9,)], "k int"), "t2")
     assert [r.k for r in vwh.read("t").collect()] == [2]  # source untouched
     assert engine.sql(
         "CREATE TABLE IF NOT EXISTS t2 SHALLOW CLONE t"
     ).collect()[0].created is False
+
+
+def test_enforce_constraints_check_semantics(spark, tmp_path):
+    """Only strictly-FALSE rows violate (NULL passes — SQL CHECK); the
+    error carries per-constraint counts; a passing frame writes through."""
+    from global_seismic_data_pipeline_spark.sources.warehouse import (
+        ConstraintViolation,
+        enforce_constraints,
+    )
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    ok = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
+    wh.overwrite(
+        enforce_constraints(ok, {"v_pos": "v > 0", "k_nn": "k IS NOT NULL"}),
+        "checked",
+    )
+    assert wh.read("checked").count() == 2
+
+    bad = spark.createDataFrame(
+        [("a", 1), ("b", -2), ("c", None), (None, 5)],
+        "k string, v long",
+    )
+    with pytest.raises(ConstraintViolation) as ei:
+        enforce_constraints(bad, {"v_pos": "v > 0", "k_nn": "k IS NOT NULL"})
+    # v > 0: only -2 is FALSE (NULL passes); k IS NOT NULL: one violation
+    assert ei.value.violations == {"v_pos": 1, "k_nn": 1}
+    with pytest.raises(ValueError, match="no constraints"):
+        enforce_constraints(bad, {})
 
 
 def test_persistent_check_constraints_enforced_on_every_write(spark, wh):

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 import pytest
 
 from global_seismic_data_pipeline_spark.sources.warehouse import Warehouse
-from global_seismic_data_pipeline_spark.sources.versioned import VersionedWarehouse
 
 
 import functools
@@ -16,19 +15,17 @@ import functools
 from global_seismic_data_pipeline_spark.sources.deltawh import DeltaLogWarehouse
 
 _ORC = functools.partial(Warehouse, fmt="orc")
-_ORC_VERSIONED = functools.partial(VersionedWarehouse, fmt="orc")
 
 
 @pytest.fixture(
-    params=[Warehouse, VersionedWarehouse, _ORC, _ORC_VERSIONED,
-            DeltaLogWarehouse],
-    ids=["plain", "versioned", "orc", "orc-versioned", "delta"],
+    params=[Warehouse, _ORC, DeltaLogWarehouse],
+    ids=["plain", "orc", "delta"],
 )
 def wh_cls(request):
     """Every warehouse-semantics test runs under ALL backends — the
-    versioned (Delta-style commit log) warehouse must be a drop-in, the
-    REAL-``_delta_log`` backend (sources/deltawh.py) too, and the
-    rename-swap ones must be storage-format-independent (parquet/ORC)."""
+    REAL-``_delta_log`` backend (sources/deltawh.py) must be a drop-in,
+    and the rename-swap ones must be storage-format-independent
+    (parquet/ORC)."""
     return request.param
 from global_seismic_data_pipeline_spark.state import WatermarkStore
 
@@ -267,11 +264,9 @@ def test_atomic_overwrite_derived_from_self(spark, tmp_path, wh_cls):
     doubled = wh.read("t").withColumn("v", F.col("v") * 2)
     wh.overwrite(doubled, "t")
     assert wh.read("t").agg(F.sum("v")).collect()[0][0] == 9900
-    # no staging/trash leftovers (the versioned backend's commit log is
-    # a permanent directory, not a leftover)
+    # no staging/trash leftovers
     leftovers = [
-        d for d in __import__("os").listdir(wh.root)
-        if d.startswith(".") and d != ".snapshots"
+        d for d in __import__("os").listdir(wh.root) if d.startswith(".")
     ]
     assert leftovers == []
 

@@ -470,12 +470,12 @@ def test_materialized_view_sink_continuous_ivm(spark, stream_dir, tmp_path):
     the change data feed, commit by commit); checkpoint restart with no
     new data leaves table and views untouched."""
     from global_seismic_data_pipeline_spark.operators import ivm
-    from global_seismic_data_pipeline_spark.sources.versioned import (
-        VersionedWarehouse,
+    from global_seismic_data_pipeline_spark.sources.deltawh import (
+        DeltaLogWarehouse,
     )
 
-    vwh = VersionedWarehouse(spark, str(tmp_path / "vwh"))
-    # seed the table + define the view at v1
+    vwh = DeltaLogWarehouse(spark, str(tmp_path / "vwh"))
+    # seed the table + define the view at v0
     seed = spark.createDataFrame(
         [("s0", "seed", 1)], "event_id string, status string, one int"
     )
@@ -529,7 +529,7 @@ def test_materialized_view_sink_continuous_ivm(spark, stream_dir, tmp_path):
     assert sorted(tuple(r) for r in vwh.read("sv_by_status").collect()) == got
 
     # plain warehouse refused up front
-    with pytest.raises(ValueError, match="VersionedWarehouse"):
+    with pytest.raises(ValueError, match="needs a DeltaLogWarehouse"):
         facade.materialized_view_sink(
             stream, Warehouse(spark, str(tmp_path / "pw")), "sv",
             ["event_id"], [], checkpoint_dir=str(tmp_path / "ck3"),

@@ -1,7 +1,10 @@
-"""VersionedWarehouse: commit log, time travel, restore, vacuum, OCC.
+"""Versioned-table contract on the Delta log backend: commit log, time
+travel, restore, vacuum, clone, and the snapshot-diff change data feed
+that serves tables without ``delta.enableChangeDataFeed``.
 
 (Drop-in parity with the plain Warehouse is covered by parametrizing
-test_state_and_merge.py / test_merge_model.py over both backends.)
+test_state_and_merge.py / test_merge_model.py over the backends; the
+file-based CDF path is covered in test_deltalog.py.)
 """
 
 import os
@@ -9,12 +12,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from global_seismic_data_pipeline_spark.sources.versioned import VersionedWarehouse
+from global_seismic_data_pipeline_spark.sources.deltawh import DeltaLogWarehouse
 
 
 @pytest.fixture()
 def wh(spark, tmp_path):
-    return VersionedWarehouse(spark, str(tmp_path / "wh"))
+    return DeltaLogWarehouse(spark, str(tmp_path / "wh"))
 
 
 def _df(spark, rows):
@@ -25,16 +28,18 @@ def test_each_mutation_commits_one_version(spark, wh):
     wh.overwrite(_df(spark, [("a", 1)]), "t")
     wh.append(_df(spark, [("b", 2)]), "t")
     wh.merge(_df(spark, [("a", 10)]), "t", ["k"])
-    assert wh.versions("t") == [1, 2, 3]
+    assert wh.versions("t") == [0, 1, 2]
     ops = [h["operation"] for h in wh.history("t")]  # newest first
-    assert ops == ["merge", "append", "overwrite"]
+    # a MERGE into an unpartitioned table commits through the overwrite
+    # path; the partition-pruned rewrite records MERGE (test below)
+    assert ops == ["WRITE", "APPEND", "WRITE"]
 
 
 def test_time_travel_reads_old_snapshot(spark, wh):
     wh.overwrite(_df(spark, [("a", 1), ("b", 2)]), "t")
     wh.overwrite(_df(spark, [("a", 100)]), "t")
-    assert {r.k: r.v for r in wh.read_version("t", 1).collect()} == {"a": 1, "b": 2}
-    assert {r.k: r.v for r in wh.read_version("t", 2).collect()} == {"a": 100}
+    assert {r.k: r.v for r in wh.read_version("t", 0).collect()} == {"a": 1, "b": 2}
+    assert {r.k: r.v for r in wh.read_version("t", 1).collect()} == {"a": 100}
     assert {r.k: r.v for r in wh.read("t").collect()} == {"a": 100}
     with pytest.raises(ValueError):
         wh.read_version("t", 99)
@@ -44,7 +49,7 @@ def test_merge_history_and_time_travel(spark, wh):
     wh.merge(_df(spark, [("a", 1), ("b", 2)]), "t", ["k"])
     wh.merge(_df(spark, [("b", 20), ("c", 3)]), "t", ["k"])
     assert len(wh.versions("t")) == 2
-    assert {r.k: r.v for r in wh.read_version("t", 1).collect()} == {"a": 1, "b": 2}
+    assert {r.k: r.v for r in wh.read_version("t", 0).collect()} == {"a": 1, "b": 2}
     assert {r.k: r.v for r in wh.read("t").collect()} == {"a": 1, "b": 20, "c": 3}
 
 
@@ -56,22 +61,21 @@ def test_partitioned_merge_commits_and_travels(spark, wh):
     upd = spark.createDataFrame([("a", 10, "2025-01")], "k string, v int, month string")
     wh.merge(upd, "t", ["k"], prune_partition_col="month")
     assert len(wh.versions("t")) == 2
-    v1 = {r.k: r.v for r in wh.read_version("t", 1).collect()}
-    assert v1 == {"a": 1, "c": 3}
+    v0 = {r.k: r.v for r in wh.read_version("t", 0).collect()}
+    assert v0 == {"a": 1, "c": 3}
     assert {r.k: r.v for r in wh.read("t").collect()} == {"a": 10, "c": 3}
-    # snapshot preserved the hive layout
-    hist = wh.history("t")
-    assert hist[0]["partition_columns"] == ["month"]
+    assert wh.partition_columns("t") == ["month"]
+    assert wh.history("t")[0]["operation"] == "MERGE"
 
 
 def test_restore_is_a_new_commit(spark, wh):
     wh.overwrite(_df(spark, [("a", 1)]), "t")
     wh.overwrite(_df(spark, [("a", 2)]), "t")
-    v = wh.restore("t", 1)
-    assert v == 3  # history is append-only
+    v = wh.restore("t", 0)
+    assert v == 2  # history is append-only
     assert {r.k: r.v for r in wh.read("t").collect()} == {"a": 1}
-    assert wh.versions("t") == [1, 2, 3]
-    assert wh.history("t")[0]["operation"] == "restore(v1)"
+    assert wh.versions("t") == [0, 1, 2]
+    assert wh.history("t")[0]["operation"] == "RESTORE"
     # restored table stays fully usable
     wh.merge(_df(spark, [("b", 9)]), "t", ["k"])
     assert {r.k: r.v for r in wh.read("t").collect()} == {"a": 1, "b": 9}
@@ -81,11 +85,11 @@ def test_vacuum_drops_old_snapshots_keeps_live(spark, wh):
     for i in range(4):
         wh.overwrite(_df(spark, [("a", i)]), "t")
     dropped = wh.vacuum_snapshots("t", keep_last=2)
-    assert dropped == [1, 2]
-    assert wh.versions("t") == [3, 4]
-    # live table and retained snapshots unaffected (hardlink safety)
+    assert dropped == [0, 1]
+    assert wh.versions("t") == [2, 3]
+    # live table and retained versions unaffected
     assert wh.read("t").first().v == 3
-    assert wh.read_version("t", 3).first().v == 2
+    assert wh.read_version("t", 2).first().v == 2
     with pytest.raises(ValueError):
         wh.vacuum_snapshots("t", keep_last=0)
 
@@ -94,65 +98,20 @@ def test_describe_detail(spark, wh):
     wh.overwrite(_df(spark, [("a", 1), ("b", 2)]), "t")
     wh.append(_df(spark, [("c", 3)]), "t")
     d = wh.describe_detail("t")
-    assert d["version"] == 2 and d["num_snapshots"] == 2
+    assert d["version"] == 1 and d["num_snapshots"] == 2
     assert d["num_files"] > 0 and d["size_bytes"] > 0
     assert d["partition_columns"] == []
     assert d["created_at_ms"] <= d["last_modified_ms"]
-    assert d["format"] == "parquet+snapshots"
-
-
-def test_occ_claim_skips_taken_version(spark, wh):
-    """A racing writer's claimed dir forces the next writer to v+1, and a
-    crashed claim (dir without _commit.json) is invisible to readers."""
-    wh.overwrite(_df(spark, [("a", 1)]), "t")
-    os.mkdir(wh._version_dir("t", 2))  # racing writer claimed v2, then died
-    wh.overwrite(_df(spark, [("a", 2)]), "t")  # must land on v3
-    assert wh.versions("t") == [1, 3]
-    assert wh.latest_version("t") == 3
-    assert {r.v for r in wh.read_version("t", 3).collect()} == {2}
-
-
-def test_snapshot_dir_hidden_from_views(spark, wh):
-    wh.overwrite(_df(spark, [("a", 1)]), "t")
-    assert wh.register_views() == ["t"]
-
-
-def test_occ_two_writers_racing_claim(spark, wh):
-    """True contention on _claim_version: two threads released by a
-    barrier race for the next version. Exactly one wins each claimed
-    number, the loser's retry lands cleanly on the next, and the commit
-    history stays linear with no gaps or duplicates."""
-    import threading
-
-    wh.overwrite(_df(spark, [("seed", 0)]), "t")  # v1
-    barrier = threading.Barrier(2)
-    results: dict[str, int] = {}
-    errors: list[Exception] = []
-
-    def writer(tag: str) -> None:
-        try:
-            barrier.wait()
-            results[tag] = wh._claim_version("t")[0]
-        except Exception as e:  # noqa: BLE001 — surface in the main thread
-            errors.append(e)
-
-    threads = [threading.Thread(target=writer, args=(t,)) for t in ("A", "B")]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors
-    # both claims succeeded, on DISTINCT consecutive versions after v1
-    assert sorted(results.values()) == [2, 3]
+    assert d["format"] == "delta"
 
 
 def test_occ_concurrent_appends_history_linear(spark, wh):
-    """Two writers appending concurrently (each claim->hardlink->commit):
-    both commits land, versions are consecutive, history is linear, and
-    the live table holds both writers' rows."""
+    """Two writers appending concurrently: both commits land, versions
+    are consecutive, history is linear, and the live table holds both
+    writers' rows (the loser of the put-if-absent race retries)."""
     import threading
 
-    wh.overwrite(_df(spark, [("seed", 0)]), "t")  # v1
+    wh.overwrite(_df(spark, [("seed", 0)]), "t")  # v0
     barrier = threading.Barrier(2)
     errors: list[Exception] = []
 
@@ -169,36 +128,28 @@ def test_occ_concurrent_appends_history_linear(spark, wh):
     for t in threads:
         t.join()
     assert not errors
-    assert wh.versions("t") == [1, 2, 3]
+    assert wh.versions("t") == [0, 1, 2]
     hist = wh.history("t")
-    assert [h["version"] for h in hist] == [3, 2, 1]
-    assert all(h["operation"] in ("append", "overwrite") for h in hist)
+    assert [h["version"] for h in hist] == [2, 1, 0]
+    assert all(h["operation"] in ("APPEND", "WRITE") for h in hist)
     live = {(r.k, r.v) for r in wh.read("t").collect()}
     assert live == {("seed", 0), ("w1", 1), ("w2", 2)}
-    # the newest snapshot must equal the live table (last commit wins the
-    # final hardlink pass; both rows were on disk by then)
-    snap = {(r.k, r.v) for r in wh.read_version("t", 3).collect()}
+    snap = {(r.k, r.v) for r in wh.read_version("t", 2).collect()}
     assert snap == live
 
 
 def test_clone_is_zero_copy_and_independent(spark, wh):
-    """SHALLOW CLONE: same rows, no data copied (hardlinks), and future
-    writes to either table never affect the other."""
-    import os
-
+    """SHALLOW CLONE: same rows, no data copied (the clone's log points
+    at the source's files), and future writes to either table never
+    affect the other."""
     wh.overwrite(_df(spark, [("a", 1), ("b", 2)]), "src")
     wh.clone("src", "dst")
     assert {(r.k, r.v) for r in wh.read("dst").collect()} == {("a", 1), ("b", 2)}
-    # hardlinked: every dst data file shares an inode with a src file
-    src_inodes = {
-        os.stat(os.path.join(r, f)).st_ino
-        for r, _, fs in os.walk(wh.path("src")) for f in fs
+    # zero-copy: the clone's root holds a log and no data files
+    assert not [
+        f for r, _, fs in os.walk(wh.path("dst")) for f in fs
         if f.endswith(".parquet")
-    }
-    for r, _, fs in os.walk(wh.path("dst")):
-        for f in fs:
-            if f.endswith(".parquet"):
-                assert os.stat(os.path.join(r, f)).st_ino in src_inodes
+    ]
     # independence both ways
     wh.append(_df(spark, [("c", 3)]), "dst")
     wh.overwrite(_df(spark, [("z", 9)]), "src")
@@ -206,53 +157,11 @@ def test_clone_is_zero_copy_and_independent(spark, wh):
         ("a", 1), ("b", 2), ("c", 3)
     }
     assert {(r.k, r.v) for r in wh.read("src").collect()} == {("z", 9)}
-    assert wh.history("dst")[-1]["operation"] == "clone(src)"
+    assert wh.history("dst")[-1]["operation"] == "CLONE"
     with pytest.raises(ValueError, match="already exists"):
         wh.clone("src", "dst")
     with pytest.raises(ValueError, match="does not exist"):
         wh.clone("nope", "other")
-
-
-def test_savepoint_restores_cross_table_consistency(spark, wh):
-    """A savepoint captures ALL listed tables at one moment; restoring it
-    brings every table back even after divergent writes."""
-    wh.overwrite(_df(spark, [("t1", 1)]), "a")
-    wh.overwrite(_df(spark, [("t1", 10)]), "b")
-    point = wh.savepoint(["a", "b"])
-    wh.append(_df(spark, [("t2", 2)]), "a")
-    wh.overwrite(_df(spark, [("t2", 20)]), "b")
-    wh.restore_savepoint(point)
-    assert {(r.k, r.v) for r in wh.read("a").collect()} == {("t1", 1)}
-    assert {(r.k, r.v) for r in wh.read("b").collect()} == {("t1", 10)}
-    # history is append-only: the restore is a NEW commit, not a rewind
-    assert wh.history("a")[0]["operation"].startswith("restore(")
-
-
-def test_enforce_constraints_check_semantics(spark, wh):
-    """Only strictly-FALSE rows violate (NULL passes — SQL CHECK); the
-    error carries per-constraint counts; a passing frame writes through."""
-    from global_seismic_data_pipeline_spark.sources.warehouse import (
-        ConstraintViolation,
-        enforce_constraints,
-    )
-
-    ok = _df(spark, [("a", 1), ("b", 2)])
-    wh.overwrite(
-        enforce_constraints(ok, {"v_pos": "v > 0", "k_nn": "k IS NOT NULL"}),
-        "checked",
-    )
-    assert wh.read("checked").count() == 2
-
-    bad = spark.createDataFrame(
-        [("a", 1), ("b", -2), ("c", None), (None, 5)],
-        "k string, v long",
-    )
-    with pytest.raises(ConstraintViolation) as ei:
-        enforce_constraints(bad, {"v_pos": "v > 0", "k_nn": "k IS NOT NULL"})
-    # v > 0: only -2 is FALSE (NULL passes); k IS NOT NULL: one violation
-    assert ei.value.violations == {"v_pos": 1, "k_nn": 1}
-    with pytest.raises(ValueError, match="no constraints"):
-        enforce_constraints(bad, {})
 
 
 def test_table_changes_cdf_vocabulary(spark, wh):
@@ -263,51 +172,52 @@ def test_table_changes_cdf_vocabulary(spark, wh):
     from global_seismic_data_pipeline_spark.sources.sqldml import SqlDml
 
     engine = SqlDml(wh)
-    wh.overwrite(_df(spark, [("a", 1), ("b", 2), ("c", 3)]), "t")  # v1
+    wh.overwrite(_df(spark, [("a", 1), ("b", 2), ("c", 3)]), "t")  # v0
+    assert not wh._cdf_enabled("t")  # the snapshot-diff path
     spark.createDataFrame([("a", 10), ("d", 4)], "k string, v int") \
         .createOrReplaceTempView("t_src")
     engine.sql("""
         MERGE INTO t tt USING t_src s ON tt.k = s.k
         WHEN MATCHED THEN UPDATE SET *
         WHEN NOT MATCHED THEN INSERT *
-    """)                                                          # v2
-    engine.sql("UPDATE t SET v = v + 100 WHERE k = 'b'")          # v3
-    engine.sql("DELETE FROM t WHERE k = 'c'")                     # v4
-    assert wh.versions("t") == [1, 2, 3, 4]
+    """)                                                          # v1
+    engine.sql("UPDATE t SET v = v + 100 WHERE k = 'b'")          # v2
+    engine.sql("DELETE FROM t WHERE k = 'c'")                     # v3
+    assert wh.versions("t") == [0, 1, 2, 3]
 
-    ch = wh.table_changes("t", 1, keys=["k"])
+    ch = wh.table_changes("t", 0, keys=["k"])
     got = sorted(
         (r._commit_version, r._change_type, r.k, r.v) for r in ch.collect()
     )
     assert got == [
-        (1, "insert", "a", 1),
-        (1, "insert", "b", 2),
-        (1, "insert", "c", 3),
-        (2, "insert", "d", 4),
-        (2, "update_postimage", "a", 10),
-        (2, "update_preimage", "a", 1),
-        (3, "update_postimage", "b", 102),
-        (3, "update_preimage", "b", 2),
-        (4, "delete", "c", 3),
+        (0, "insert", "a", 1),
+        (0, "insert", "b", 2),
+        (0, "insert", "c", 3),
+        (1, "insert", "d", 4),
+        (1, "update_postimage", "a", 10),
+        (1, "update_preimage", "a", 1),
+        (2, "update_postimage", "b", 102),
+        (2, "update_preimage", "b", 2),
+        (3, "delete", "c", 3),
     ]
     # range filter: only the DELETE commit
-    only4 = wh.table_changes("t", 4, 4, keys=["k"]).collect()
-    assert [(r._change_type, r.k) for r in only4] == [("delete", "c")]
+    only3 = wh.table_changes("t", 3, 3, keys=["k"]).collect()
+    assert [(r._change_type, r.k) for r in only3] == [("delete", "c")]
     # timestamps come from the commit record
     rec_ts = {h["version"]: h["timestamp_ms"] for h in wh.history("t")}
     assert all(r._commit_timestamp_ms == rec_ts[r._commit_version]
                for r in ch.collect())
-    # unchanged rows never appear: v2 touched a and d only
-    v2 = wh.table_changes("t", 2, 2, keys=["k"]).collect()
-    assert {r.k for r in v2} == {"a", "d"}
+    # unchanged rows never appear: v1 touched a and d only
+    v1 = wh.table_changes("t", 1, 1, keys=["k"]).collect()
+    assert {r.k for r in v1} == {"a", "d"}
 
 
 def test_table_changes_keyless_and_errors(spark, wh):
     """Without keys: whole-row multiset diff (modified row = delete +
     insert, duplicates respected); empty ranges and missing tables refuse."""
-    wh.overwrite(_df(spark, [("a", 1), ("a", 1), ("b", 2)]), "t")   # v1
-    wh.overwrite(_df(spark, [("a", 1), ("b", 99)]), "t")            # v2
-    ch = wh.table_changes("t", 2, 2)
+    wh.overwrite(_df(spark, [("a", 1), ("a", 1), ("b", 2)]), "t")   # v0
+    wh.overwrite(_df(spark, [("a", 1), ("b", 99)]), "t")            # v1
+    ch = wh.table_changes("t", 1, 1)
     got = sorted((r._change_type, r.k, r.v) for r in ch.collect())
     # one duplicate 'a' dropped + b modified → delete+insert pair
     assert got == [
@@ -316,7 +226,7 @@ def test_table_changes_keyless_and_errors(spark, wh):
     with pytest.raises(ValueError, match="no commits in"):
         wh.table_changes("t", 5, 9)
     with pytest.raises(ValueError, match="no committed versions"):
-        wh.table_changes("ghost", 1)
+        wh.table_changes("ghost", 0)
 
 
 def test_table_changes_null_keys_and_null_values(spark, wh):
@@ -324,9 +234,9 @@ def test_table_changes_null_keys_and_null_values(spark, wh):
     NULL→value change is detected (null-safe struct compare)."""
     rows1 = spark.createDataFrame([(None, 1), ("a", None)], "k string, v int")
     rows2 = spark.createDataFrame([(None, 5), ("a", 7)], "k string, v int")
-    wh.overwrite(rows1, "t")   # v1
-    wh.overwrite(rows2, "t")   # v2
-    ch = wh.table_changes("t", 2, 2, keys=["k"])
+    wh.overwrite(rows1, "t")   # v0
+    wh.overwrite(rows2, "t")   # v1
+    ch = wh.table_changes("t", 1, 1, keys=["k"])
     got = sorted(
         (r._change_type, r.k or "", r.v) for r in ch.collect()
     )
@@ -352,7 +262,7 @@ def test_table_changes_replay_reconstructs_state(spark, wh):
     def rand_rows(n):
         return [(rng.choice(keys), rng.randrange(100)) for _ in range(n)]
 
-    wh.overwrite(_df(spark, [("k0", 1), ("k1", 2)]), "t")          # v1
+    wh.overwrite(_df(spark, [("k0", 1), ("k1", 2)]), "t")          # v0
     for step in range(5):
         op = step % 3
         if op == 0:
@@ -371,7 +281,7 @@ def test_table_changes_replay_reconstructs_state(spark, wh):
             bumped = [(k, v + 1) for k, v in survivors]
             wh.overwrite(_df(spark, bumped or [("k0", 0)]), "t")
 
-    feed = wh.table_changes("t", 1, keys=["k"]).collect()
+    feed = wh.table_changes("t", 0, keys=["k"]).collect()
     by_commit = {}
     for r in feed:
         by_commit.setdefault(r._commit_version, []).append(r)
