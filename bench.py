@@ -167,32 +167,13 @@ SPLIT = {
 def run_one(name: str, sf_dir: str) -> dict:
     """Measure one query (and the calibration probe) in this process."""
     import __spark_entry__ as ent
-    from global_seismic_data_pipeline_spark.operators import (
-        bloom,
-        bpe,
-        classify,
-        cluster,
-        neardup,
-        ranking,
-        search,
-        text,
-        sketch,
+    from global_seismic_data_pipeline_spark.session import (
+        get_spark,
+        materialized_scope,
     )
-    from global_seismic_data_pipeline_spark.session import get_spark
 
     spark = get_spark(f"bench-{name}")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def _release():
-        neardup.release_cached()
-        bloom.release_cached()
-        sketch.release_cached()
-        ranking.release_cached()
-        search.release_cached()
-        bpe.release_cached()
-        classify.release_cached()
-        text.release_cached()
-        cluster.release_cached()
 
     cold = os.environ.get("BENCH_COLD") == "1"
     runs = 1 if cold else 4
@@ -206,20 +187,23 @@ def run_one(name: str, sf_dir: str) -> dict:
         # query used in earlier rounds (so build+probe stays comparable):
         # build 1 pays codegen/session one-offs and is discarded; build 2
         # (a fresh tempdir store) is the recorded build time.
+        # every build and every probe runs in its own scope, so each starts
+        # with nothing cached (the build's frames are released before the
+        # first probe, as before)
         t_build = None
         for i in range(1 if cold else 2):
-            _release()
-            t0 = time.time()
-            ctx = build(spark, sf_dir)
-            t_build = time.time() - t0
+            with materialized_scope():
+                t0 = time.time()
+                ctx = build(spark, sf_dir)
+                t_build = time.time() - t0
         times = []
         for _ in range(runs):
-            _release()
-            t0 = time.time()
-            probe(spark, sf_dir, ctx).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            times.append(time.time() - t0)
+            with materialized_scope():
+                t0 = time.time()
+                probe(spark, sf_dir, ctx).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                times.append(time.time() - t0)
         t_probe = times[0] if cold else min(times[1:])
         return {
             "t": round(t_build + t_probe, 3),
@@ -231,10 +215,10 @@ def run_one(name: str, sf_dir: str) -> dict:
     fn = ent.queries()[name]
     times = []
     for _ in range(runs):
-        _release()
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times.append(time.time() - t0)
+        with materialized_scope():
+            t0 = time.time()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            times.append(time.time() - t0)
     t = times[0] if cold else min(times[1:])
     return {"t": t, "calib": _calibrate(spark)}
 

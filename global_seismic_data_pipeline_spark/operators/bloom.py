@@ -34,29 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-_PERSISTED: list[DataFrame] = []
-
-
-def _materialized(df: DataFrame) -> DataFrame:
-    """Materialize-once (module docstring of operators/neardup.py): the
-    probe joins the bitmap k times, and an unpersisted bitmap would
-    re-execute its build (dim scan + distinct + explode + bit_or shuffle)
-    once PER PROBE JOIN — measured 4× build cost at sf0.1. Persist is
-    lazy: run 1 of the probe computes and caches, probes 2..k reuse."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
-    return df
-
-
-def release_cached() -> int:
-    """Unpersist every bitmap pinned by this module; returns the count."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n
+from ..session import materialize
 
 
 def _h12(key: Column, salt: str) -> tuple[Column, Column]:
@@ -120,7 +99,11 @@ def bloom_prune(
     """
     _validate(m_log2, k)
     m = 1 << m_log2
-    bloom = _materialized(bloom)
+    # materialize once: the probe joins the bitmap k times, and an
+    # unpersisted bitmap re-executes its build (dim scan + distinct +
+    # explode + bit_or shuffle) once PER PROBE JOIN — measured 4× build
+    # cost at sf0.1. Persist is lazy: probe 1 caches, probes 2..k reuse.
+    bloom = materialize(bloom)
     h1, h2 = _h12(F.col(key_col), salt)
     # Optimizer barrier: CollapseProject re-inlines deterministic
     # expressions into every downstream join projection — measured 25

@@ -71,20 +71,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..session import materialize
 from .partitioning import ensure_parallelism
 from .text import normalized
-
-_PERSISTED: list[DataFrame] = []
-
-
-def release_cached() -> int:
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n
 
 
 def word_occurrences(
@@ -93,8 +83,8 @@ def word_occurrences(
     """(doc, slot, w): one row per word occurrence of the normalized
     corpus — the shared tokenization front of the trainer (via
     :func:`word_freqs`) and the encoder (which joins encodings back to
-    these rows). Persisted so a train-then-encode pipeline tokenizes the
-    corpus ONCE; released via :func:`release_cached`."""
+    these rows). Materialized so a train-then-encode pipeline tokenizes
+    the corpus ONCE; released with the caller's ``materialized_scope``."""
     occ = ensure_parallelism(
         docs.select(F.col(id_col), F.col(text_col))
     ).select(
@@ -103,7 +93,7 @@ def word_occurrences(
             "slot", "w"
         ),
     )
-    return _persist(occ)
+    return materialize(occ)
 
 
 def word_freqs(
@@ -156,12 +146,6 @@ def _pair_counts(state: DataFrame) -> DataFrame:
     )
 
 
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
-    return df
-
-
 def _checkpoint(df: DataFrame) -> DataFrame:
     """Persist AND truncate lineage. A delta round references the previous
     state several times (candidate keys, semi, anti), so without
@@ -170,10 +154,9 @@ def _checkpoint(df: DataFrame) -> DataFrame:
     plan at the materialized data, the standard move for iterative Spark
     algorithms (Pregel/GraphX do the same); production would point
     ``sparkContext.setCheckpointDir`` at reliable storage and use
-    ``checkpoint()`` to survive executor loss."""
-    df = df.localCheckpoint(eager=False)
-    _PERSISTED.append(df)
-    return df
+    ``checkpoint()`` to survive executor loss. Not scope-released: Spark's
+    ContextCleaner frees the blocks once nothing references them."""
+    return df.localCheckpoint(eager=False)
 
 
 def _apply_merge(rows: DataFrame, a: str, b: str) -> DataFrame:
@@ -224,27 +207,27 @@ def _full_round(state: DataFrame, counts: DataFrame, a: str, b: str):
     delta bookkeeping would touch ~every word anyway). Plain persist: a
     full round references state ONCE, so lineage grows linearly — only
     the multi-reference delta rounds need the checkpoint truncation."""
-    next_state = _persist(_apply_merge(state, a, b))
-    next_counts = _persist(_pair_counts(next_state))
+    next_state = materialize(_apply_merge(state, a, b))
+    next_counts = materialize(_pair_counts(next_state))
     return next_state, next_counts
 
 
 def _delta_round(state: DataFrame, counts: DataFrame, a: str, b: str):
     """Rare-pair round: only words containing (a, b) are re-windowed and
     re-counted; every other word's rows and pair counts carry over."""
-    cand_keys = _persist(
+    cand_keys = materialize(
         state.filter(
             (F.col("sym") == F.lit(a)) & (F.col("nxt") == F.lit(b))
         )
         .select("w")
         .distinct()
     )
-    affected = _persist(
+    affected = materialize(
         state.join(F.broadcast(cand_keys), ["w"], "left_semi")
     )
     untouched = state.join(F.broadcast(cand_keys), ["w"], "left_anti")
 
-    merged = _persist(_apply_merge(affected, a, b))
+    merged = materialize(_apply_merge(affected, a, b))
 
     # counts' = counts - pairs(affected, pre-merge) + pairs(affected, post)
     sub = _pair_counts(affected).withColumn("cnt", -F.col("cnt"))
@@ -288,8 +271,8 @@ def learn_merge_list(
     from functools import reduce
 
     vocab = word_freqs(docs, id_col=id_col, text_col=text_col, occ=occ)
-    state = _persist(_with_adjacency(char_rows(vocab)))
-    counts = _persist(_pair_counts(state))
+    state = materialize(_with_adjacency(char_rows(vocab)))
+    counts = materialize(_pair_counts(state))
     # corpus word-occurrence total: Σ freq over the rn==1 rows (every
     # word has exactly one) — the denominator of the routing test.
     # (Folding this into round 1's argmax as a crossJoin was tried and
@@ -415,11 +398,11 @@ def encode_with_merges(
     if occ is None:
         occ = word_occurrences(docs, id_col=id_col, text_col=text_col)
     vocab = occ.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-    state = _persist(_with_adjacency(char_rows(vocab)))
+    state = materialize(_with_adjacency(char_rows(vocab)))
     for i, (a, b) in enumerate(merges, 1):
         nxt = _apply_merge(state, a, b)
         state = (
-            _checkpoint(nxt) if i % checkpoint_every == 0 else _persist(nxt)
+            _checkpoint(nxt) if i % checkpoint_every == 0 else materialize(nxt)
         )
     encoded = state.groupBy("w").agg(
         F.count(F.lit(1)).alias("n_toks"),

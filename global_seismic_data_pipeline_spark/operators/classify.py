@@ -33,22 +33,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from ..session import materialize
 from .text import token_rows
-
-_PERSISTED: list[DataFrame] = []
-
-
-def release_cached() -> int:
-    """Drop module-held persisted frames (bench hygiene: Spark's
-    CacheManager matches by logical plan, so a fresh identical pipeline
-    would silently reuse the previous run's cache)."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n
-
 
 _BITS = "cast(length(bin({x})) as long)"
 
@@ -86,10 +74,10 @@ def nb_train(
     # row count enter the plan as broadcast one-row aggregates, never as
     # driver-side counts (each of those would be an extra full corpus
     # pass at train time).
-    counts = labeled.groupBy(label_col, "tok").agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).persist()
-    _PERSISTED.append(counts)
+    counts = materialize(
+        labeled.groupBy(label_col, "tok").agg(F.count(F.lit(1)).alias("cnt")),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     vsz = counts.agg(F.count_distinct("tok").alias("__v"))
     ntr = df.agg(F.count(F.lit(1)).alias("__n"))
     classes = (

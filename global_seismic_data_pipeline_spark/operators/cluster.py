@@ -37,19 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-# Converged label tables stay persisted (downstream joins consume them);
-# sessions that run many clusterings release them here — same pattern as
-# neardup._PERSISTED.
-_PERSISTED: list[DataFrame] = []
-
-
-def release_cached() -> int:
-    """Unpersist every table cached by this module; returns the count."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n
+from ..session import materialize
 
 
 def connected_components(
@@ -111,10 +99,12 @@ def connected_components(
                 .filter(F.col("n.comp") != F.col("o.comp"))
                 .count()
             )
+            # frees round 0's persisted table; the checkpointed rounds
+            # (and the converged result) are freed by Spark's
+            # ContextCleaner once nothing references them
             labels.unpersist()
             labels = new_labels
             if changed == 0:
-                _PERSISTED.append(labels)
                 return labels.select("id", "comp")
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} supersteps"
@@ -173,19 +163,17 @@ def pagerank_integer(
     Scale shape (Pregel-style): per iteration, one broadcast-or-shuffle
     join of the rank table onto edges keyed by src and one map-side
     combinable sum keyed by dst — the classic two-shuffle superstep; the
-    edge table is persisted ONCE and reused by every round (release via
-    ``release_cached``). Returns (node, pagerank_q, outdeg, indeg)."""
-    e = edges.select(
+    edge table is materialized ONCE and reused by every round (released
+    with the caller's ``materialized_scope``). Returns (node, pagerank_q,
+    outdeg, indeg)."""
+    e = materialize(edges.select(
         F.col(src_col).cast("long").alias("src"), F.col(dst_col).cast("long").alias("dst")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(e)
-    nodes = (
+    ))
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED.append(nodes)
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
     base = (scale * (damping_den - damping_num)) // damping_den
@@ -246,18 +234,13 @@ def triangle_count(
     # closing join — each diamond is persisted once or its whole build
     # (including the caller's edge derivation) re-executes per consumer
     # (CLAUDE.md: a DataFrame joined k times must be persisted).
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _PERSISTED.append(e)
-    deg = (
+    e = materialize(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
+    deg = materialize(
         e.select(F.col("a").alias("v"))
         .unionAll(e.select(F.col("b").alias("v")))
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED.append(deg)
     ranked = (
         e.join(F.broadcast(deg.select(F.col("v").alias("a"), F.col("deg").alias("da"))), "a")
         .join(F.broadcast(deg.select(F.col("v").alias("b"), F.col("deg").alias("db"))), "b")
@@ -266,17 +249,14 @@ def triangle_count(
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    oriented = ranked.select(
+    oriented = materialize(ranked.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("w"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(oriented)
-    wedges = (
+    ))
+    wedges = materialize(
         oriented.select(F.col("u").alias("x"), F.col("w").alias("y"))
         .join(oriented.select(F.col("u").alias("y"), F.col("w").alias("z")), "y")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED.append(wedges)
     closed = wedges.join(
         oriented.select(F.col("u").alias("x"), F.col("w").alias("z")),
         ["x", "z"],

@@ -38,10 +38,11 @@ window → collect_set pipeline repeated per consumer (exchange reuse does
 not fire across these subtrees under AQE; verified empirically on 4.1).
 Materialize-once is the standard MinHash build anyway: at corpus scale the
 signature/set tables are written once and joined many times, never
-recomputed per consumer. Persisted blocks stay in the session cache
-(LRU-evicted; MEMORY_AND_DISK spills instead of OOMing), repeated calls
-with the same input reuse them via CacheManager plan matching, and
-``release_cached()`` frees everything this module pinned.
+recomputed per consumer. Tables go through ``session.materialize``:
+they stay in the session cache (LRU-evicted; MEMORY_AND_DISK spills
+instead of OOMing) until the caller's ``materialized_scope()`` closes,
+and repeated calls with the same input reuse them via CacheManager plan
+matching.
 """
 
 from __future__ import annotations
@@ -50,33 +51,11 @@ import random
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..session import materialize
 from .text import normalized
 
 HASH_PRIME = 2147483647  # 2^31 - 1; keeps a*h + b within int64
-
-# Every table persisted by this module is tracked so sessions running many
-# pair operators (the correctness checker sweeps 3 SFs) can release them;
-# otherwise blocks stay pinned until the session ends.
-_PERSISTED: list[DataFrame] = []
-
-
-def _materialized(df: DataFrame) -> DataFrame:
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
-    return df
-
-
-def release_cached() -> int:
-    """Unpersist every table cached by this module's operators; returns the
-    number released. Safe to call while derived DataFrames are still alive
-    (they recompute from lineage on next use)."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n
 
 
 def portable_hash64(col) -> "F.Column":
@@ -170,7 +149,7 @@ def ngram_jaccard_pairs(
     if max_shingle_freq is not None:
         # the pre-cut rows feed BOTH the frequency aggregate and the join
         # probe side — materialize first or the shingling runs twice
-        exploded = _materialized(exploded)
+        exploded = materialize(exploded)
         freq_ok = (
             exploded.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df_"))
@@ -179,7 +158,7 @@ def ngram_jaccard_pairs(
         )
         exploded = exploded.join(freq_ok, "shingle")
     # three consumers (sizes, join left, join right) — materialize once
-    exploded = _materialized(exploded)
+    exploded = materialize(exploded)
     # sizes AFTER the stop-shingle cut: intersection and sizes must count
     # the same shingle universe or Jaccard is systematically understated
     # (a fully-filtered duplicate pair would score 0 against stale sizes)
@@ -323,14 +302,14 @@ def minhash_lsh_pairs(
     # set table then feeds both verify joins and the signature table both
     # band-join sides — persist each, or the split→window pipeline
     # re-executes per consumer (see module docstring).
-    srows = _materialized(shingle_rows(df, id_col=id_col, text_col=text_col, n=n))
-    sets = _materialized(
+    srows = materialize(shingle_rows(df, id_col=id_col, text_col=text_col, n=n))
+    sets = materialize(
         srows.groupBy(id_col).agg(F.collect_set("shingle").alias("shingles"))
     )
     hashed = srows.select(
         F.col(id_col), F.pmod(_hash64(F.col("shingle"), hasher), F.lit(HASH_PRIME)).alias("h")
     )
-    sigs = _materialized(_signatures_from_hashes(hashed, id_col, num_hashes, seed))
+    sigs = materialize(_signatures_from_hashes(hashed, id_col, num_hashes, seed))
     # the band self-join carries ONLY (id, band, bucket) — shipping the
     # shingle arrays through a B-way explode + shuffle would multiply the
     # shuffled bytes by bands×|shingles|; arrays attach later, once, to the
@@ -426,7 +405,7 @@ def simhash_pairs(
     chunk_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << chunk_bits) - 1
     # both band-join sides consume the fingerprints — materialize once
-    sh = _materialized(
+    sh = materialize(
         simhash_fingerprints(df, id_col=id_col, text_col=text_col, hasher=hasher)
     )
     banded = sh.select(
@@ -497,7 +476,7 @@ def prefix_filtered_jaccard_pairs(
     if not 0 < threshold_num <= threshold_den:
         raise ValueError("threshold must be a rational in (0, 1]")
     threshold = threshold_num / threshold_den
-    rows = _materialized(
+    rows = materialize(
         shingle_rows(df, id_col=id_col, text_col=text_col, n=n)
         .dropDuplicates([id_col, "shingle"])
         .select(F.col(id_col).alias("doc_id_"), "shingle")
@@ -591,7 +570,7 @@ def prefix_filtered_jaccard_pairs(
         F.col("size_b") - F.col("pos_b"),
     )
     cands = grouped.filter(tight_bound >= alpha).select("id_a", "id_b")
-    cands = _materialized(cands)
+    cands = materialize(cands)
     # verification = the exhaustive count join RESTRICTED to candidates:
     # replicate id_a's token rows per candidate partner, match id_b's rows
     # on (id_b, shingle), count. Token-row work is O(tokens of candidate

@@ -47,10 +47,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from ..sources.warehouse import Warehouse
 from .neardup import (
     _hash64,
-    _materialized,
     band_rows,
     shingle_rows,
     sig_expr,
@@ -162,18 +162,18 @@ def build_minhash_index(
                 _hash64(F.col("shingle"), hasher), F.lit(HASH_PRIME)
             ).alias("h"),
         )
-        idx = _materialized(
+        idx = materialize(
             hashed.groupBy(id_col).agg(
                 sig_expr(num_hashes, seed).alias("sig")
             )
         )
     else:
         # ONE aggregate feeds three writes, so the index rows persist
-        # (MEMORY_AND_DISK; released via neardup.release_cached) — the
+        # (MEMORY_AND_DISK, until the caller's scope closes) — the
         # sets write materializes the cache and the docs/bands writes
         # read it, replacing the old combined-write + parquet read-back
         # (same-minute A/B: 2.83 s -> 2.34 s steady-state at sf0.1)
-        idx = _materialized(
+        idx = materialize(
             _index_rows(
                 docs, id_col=id_col, text_col=text_col, n=n,
                 num_hashes=num_hashes, seed=seed, hasher=hasher,
@@ -295,13 +295,13 @@ def incremental_minhash_pairs(
     hasher, num_buckets = meta["hasher"], meta["num_buckets"]
     spark = warehouse.spark
 
-    new_idx = _materialized(
+    new_idx = materialize(
         _index_rows(
             new_docs, id_col=id_col, text_col=text_col, n=n,
             num_hashes=num_hashes, seed=seed, hasher=hasher,
         )
     )
-    new_bands = _materialized(
+    new_bands = materialize(
         band_rows(
             new_idx, id_col=id_col, num_hashes=num_hashes,
             bands=bands_n, hasher=hasher,

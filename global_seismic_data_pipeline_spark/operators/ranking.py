@@ -49,22 +49,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.storagelevel import StorageLevel
+
+from ..session import materialize
 
 _PID = "__rank_pid"
-
-# the range-partitioned input stays pinned while its ranked output is
-# alive (pid-based offsets are only valid against the SAME materialized
-# partitioning); release like the other operator caches
-_PERSISTED: list[DataFrame] = []
-
-
-def release_cached() -> int:
-    """Unpersist every partitioning pinned by this module."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n
 
 
 def ranked(
@@ -141,12 +130,15 @@ def _range_ranked(
     spark = df.sparkSession
     n_parts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    part = (
-        df.repartitionByRange(n_parts, *sort_exprs).sortWithinPartitions(*sort_exprs)
-    ).persist()  # pin: the stats job and the rank pass must see the SAME
-    # range boundaries (the partitioner samples; two independent
-    # executions could split differently and corrupt the offsets)
-    _PERSISTED.append(part)
+    # pin: the stats job and the rank pass must see the SAME range
+    # boundaries (the partitioner samples; two independent executions could
+    # split differently and corrupt the offsets), so the partitioning stays
+    # materialized while the ranked output is alive — until the caller's
+    # materialized_scope closes
+    part = materialize(
+        df.repartitionByRange(n_parts, *sort_exprs).sortWithinPartitions(*sort_exprs),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     try:
         stats = (
             part.select(F.spark_partition_id().alias(_PID), *order_cols)
@@ -250,10 +242,10 @@ def prefix_sums(
     sort_exprs = [
         F.col(c).asc() if ascending else F.col(c).desc() for c in order_cols
     ]
-    part = (
-        df.repartitionByRange(n_parts, *sort_exprs).sortWithinPartitions(*sort_exprs)
-    ).persist()
-    _PERSISTED.append(part)
+    part = materialize(
+        df.repartitionByRange(n_parts, *sort_exprs).sortWithinPartitions(*sort_exprs),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     try:
         stats = (
             part.groupBy(F.spark_partition_id().alias(_PID))

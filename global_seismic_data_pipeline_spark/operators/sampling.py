@@ -33,6 +33,9 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.storagelevel import StorageLevel
+
+from ..session import materialize
 
 _HEX_DIGITS = 8  # 32 bits of the md5 — fraction resolution ~2.3e-10
 
@@ -516,13 +519,12 @@ def perplexity_buckets(
         F.expr(f"{sum_col} * {int(scale)} div {n_col}").cast("long"),
     )
     # the ranked table feeds BOTH the row-count aggregate and the bucket
-    # projection — persist the diamond or the Arrow rank pass (and the
-    # whole upstream scoring chain's cache read) runs twice per action;
-    # tracked in ranking's release list, which the bench releases
-    pos = ranking.ranked(
-        scaled, ["scaled_bits", id_col], method="rank", out_col="rk"
-    ).persist()
-    ranking._PERSISTED.append(pos)
+    # projection — materialize the diamond or the Arrow rank pass (and the
+    # whole upstream scoring chain's cache read) runs twice per action
+    pos = materialize(
+        ranking.ranked(scaled, ["scaled_bits", id_col], method="rank", out_col="rk"),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     n = pos.agg(F.count(F.lit(1)).alias("__n"))
     return (
         pos.crossJoin(F.broadcast(n))

@@ -36,21 +36,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
-
+from ..session import materialize
 from .partitioning import ensure_parallelism
 from .text import normalized
-
-_PERSISTED: list[DataFrame] = []
-
-
-def release_cached() -> int:
-    """Unpersist tables cached by this module; returns the count."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n
 
 
 def _token_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -73,19 +61,16 @@ def term_counts(
     length is Σ tf per doc and its query-term tf is a filter of these
     rows; TF-IDF consumes them directly. Sharing this table means a
     hybrid pipeline aggregates the token rows once (map-side combined)
-    instead of once per scorer (guide §2.4). Persisted; released via
-    :func:`release_cached`. The token rows feed exactly this aggregate,
-    so they are built UNPERSISTED — caching them would add a second
-    materialization of the corpus's largest intermediate for a single
-    consumer."""
-    tfc = (
+    instead of once per scorer (guide §2.4). Materialized until the
+    caller's ``materialized_scope`` closes. The token rows feed exactly
+    this aggregate, so they are built UNPERSISTED — caching them would add
+    a second materialization of the corpus's largest intermediate for a
+    single consumer."""
+    return materialize(
         _token_rows(docs, id_col, text_col)
         .groupBy("id_", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED.append(tfc)
-    return tfc
 
 
 def bm25_topk(

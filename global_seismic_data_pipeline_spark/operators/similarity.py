@@ -24,7 +24,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
+from pyspark.storagelevel import StorageLevel
 
+from ..session import materialize, materialized_scope
 from .partitioning import ensure_parallelism
 
 
@@ -244,6 +246,63 @@ def _centroids(dim: int, cells: int, seed: int) -> np.ndarray:
     return c / np.linalg.norm(c, axis=1, keepdims=True)
 
 
+def _lloyd(
+    df: DataFrame, vec_col: str, cb: np.ndarray, iters: int, partials
+) -> np.ndarray:
+    """The exact-integer Lloyd loop behind :func:`train_ivf_codebook` and
+    :func:`train_pq_codebooks`, from the initial quantized codebook ``cb``.
+    ``partials(xq, cb)`` runs one assignment pass over the quantized
+    training set ``xq`` (column ``xq``) and returns ``(key, n, sums)``
+    partials for centroid ``cb[key]``, a key possibly repeated (one per
+    partition); they are totalled in python ints, the update floor-divides
+    ``sums // n`` (matches ``np.floor_divide``) and empty centroids keep
+    their previous value.
+
+    The quantized column is materialized once across iterations, in a
+    scope of its own. After iteration 1 it is COALESCED to
+    ~``_LLOYD_ROWS_PER_TASK`` rows per task (row count comes free from
+    iteration 1's partial counts — no extra action): a Lloyd pass over a
+    small training sample is fixed-overhead-bound, and AQE's
+    parallelism-first coalescing never shrinks below core count, so a
+    1600-row sample otherwise pays 32 Python-task launches per iteration
+    (measured 0.47 s/iter vs 0.21 s on one task). The coalesce is narrow
+    (reads the cached blocks, no shuffle) and the partial sums are
+    associative exact ints, so the codebook is bit-identical under any
+    task count."""
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def quant_pd(vecs: pd.Series) -> pd.Series:
+        mat = np.array(vecs.tolist(), dtype=np.float64)
+        return pd.Series(list(quantize(mat)))
+
+    with materialized_scope():
+        cached = materialize(
+            df.select(quant_pd(F.col(vec_col)).alias("xq")),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        )
+        xq = cached
+        for it in range(iters):
+            totals: dict = {}
+            for key, n, sums in partials(xq, cb):
+                t = totals.setdefault(key, [0, [0] * len(sums)])
+                t[0] += n
+                t[1] = [a + b for a, b in zip(t[1], sums)]
+            if it == 0:
+                # each vector counts once per codebook (PQ: once per
+                # subspace), so Σn over the codebook count is the row count
+                n_rows = sum(n for n, _s in totals.values()) // int(
+                    np.prod(cb.shape[:-2])
+                )
+                cur = xq.rdd.getNumPartitions()
+                want = max(1, min(cur, -(-n_rows // _LLOYD_ROWS_PER_TASK)))
+                if want < cur:
+                    xq = cached.coalesce(want)
+            cb = cb.copy()
+            for key, (n, sums) in totals.items():
+                cb[key] = [v // n for v in sums]
+        return cb
+
+
 def train_ivf_codebook(
     df: DataFrame,
     *,
@@ -272,17 +331,6 @@ def train_ivf_codebook(
     numpy from the same parquet and lands on the identical codebook, which
     is what keeps the trained ``ivf_ann_topk`` hash-checkable.
 
-    After iteration 1 the cached training set is COALESCED to
-    ~``_LLOYD_ROWS_PER_TASK`` rows per task (row count comes free from
-    iteration 1's partial counts — no extra action): a Lloyd pass over a
-    small training sample is fixed-overhead-bound, and AQE's
-    parallelism-first coalescing never shrinks below core count, so a
-    1600-row sample otherwise pays 32 Python-task launches per iteration
-    (measured 0.47 s/iter vs 0.21 s on one task). The coalesce is narrow
-    (reads the cached blocks, no shuffle) and the partial sums are
-    associative exact ints, so the codebook is bit-identical under any
-    task count.
-
     Scale shape per iteration: ONE fused Arrow pass (mapInPandas) that
     assigns cells AND emits per-partition partial sums — ≤ cells ×
     (dim+2) longs per partition, collected and combined driver-side in
@@ -290,78 +338,41 @@ def train_ivf_codebook(
     3× faster than the assign-then-groupBy form it replaced, and the
     partial sums are associative so the codebook is bit-identical).
     The int64 executor partials cannot overflow: |quantized| ≤ 2^20
-    and a partition holds ≪ 2^40 rows. The quantized-vector column is
-    persisted once across iterations. Train on a sample at 100 TB
-    (pass a pre-sampled df — k-means quality saturates far below
-    corpus size).
+    and a partition holds ≪ 2^40 rows. The loop itself (materialized
+    quantized column, coalesce, update) is :func:`_lloyd`. Train on a
+    sample at 100 TB (pass a pre-sampled df — k-means quality saturates
+    far below corpus size).
     """
-    init = quantize(_centroids(dim, cells, seed))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def quant_pd(vecs: pd.Series) -> pd.Series:
-        mat = np.array(vecs.tolist(), dtype=np.float64)
-        return pd.Series(list(quantize(mat)))
-
-    cached = df.select(quant_pd(F.col(vec_col)).alias("xq")).persist()
-    xq = cached
     part_cols = ["cell", "n"] + [f"s{d}" for d in range(dim)]
     part_schema = ", ".join(f"{c} long" for c in part_cols)
-    try:
-        cb = init
-        for it in range(iters):
-            cb_now = cb.copy()
 
-            def partials_fn(batches, cb_now=cb_now):
-                # factory default: bakes THIS iteration's codebook (a
-                # plain closure would late-bind to the final cb)
-                agg: dict[int, list] = {}
-                for pdf in batches:
-                    m = np.array(pdf["xq"].tolist(), dtype=np.int64)
-                    if not len(m):
-                        continue
-                    idx = np.argmax(m @ cb_now.T, axis=1)
-                    for c in np.unique(idx):
-                        sel = m[idx == c]
-                        e = agg.get(int(c))
-                        if e is None:
-                            agg[int(c)] = [
-                                len(sel),
-                                sel.sum(axis=0, dtype=np.int64),
-                            ]
-                        else:
-                            e[0] += len(sel)
-                            e[1] = e[1] + sel.sum(
-                                axis=0, dtype=np.int64
-                            )
-                rows = [
-                    [c, e[0], *map(int, e[1])]
-                    for c, e in agg.items()
-                ]
-                yield pd.DataFrame(rows, columns=part_cols)
+    def partials(xq: DataFrame, cb: np.ndarray):
+        def partials_fn(batches):
+            agg: dict[int, list] = {}
+            for pdf in batches:
+                m = np.array(pdf["xq"].tolist(), dtype=np.int64)
+                if not len(m):
+                    continue
+                idx = np.argmax(m @ cb.T, axis=1)
+                for c in np.unique(idx):
+                    sel = m[idx == c]
+                    e = agg.get(int(c))
+                    if e is None:
+                        agg[int(c)] = [len(sel), sel.sum(axis=0, dtype=np.int64)]
+                    else:
+                        e[0] += len(sel)
+                        e[1] = e[1] + sel.sum(axis=0, dtype=np.int64)
+            rows = [[c, e[0], *map(int, e[1])] for c, e in agg.items()]
+            yield pd.DataFrame(rows, columns=part_cols)
 
-            partials = xq.mapInPandas(partials_fn, part_schema).collect()
-            acc: dict[int, tuple[int, list[int]]] = {}
-            for r in partials:
-                c = int(r["cell"])
-                n0, s0 = acc.get(c, (0, [0] * dim))
-                acc[c] = (
-                    n0 + int(r["n"]),
-                    [s0[d] + int(r[f"s{d}"]) for d in range(dim)],
-                )
-            if it == 0:
-                n_rows = sum(n for n, _s in acc.values())
-                cur = xq.rdd.getNumPartitions()
-                want = max(1, min(cur, -(-n_rows // _LLOYD_ROWS_PER_TASK)))
-                if want < cur:
-                    xq = cached.coalesce(want)
-            new_cb = cb.copy()
-            for c, (n, s) in acc.items():
-                # python ints: floor division (matches np.floor_divide)
-                new_cb[c] = [s[d] // n for d in range(dim)]
-            cb = new_cb
-        return cb
-    finally:
-        cached.unpersist()
+        return [
+            (int(r["cell"]), int(r["n"]), [int(r[f"s{d}"]) for d in range(dim)])
+            for r in xq.mapInPandas(partials_fn, part_schema).collect()
+        ]
+
+    return _lloyd(
+        df, vec_col, quantize(_centroids(dim, cells, seed)), iters, partials
+    )
 
 
 def with_ivf_cells(
@@ -494,45 +505,31 @@ def train_pq_codebooks(
     # init matches the data scale of unit-norm vectors (per-dim std ~ 1/sqrt(dim))
     cb = quantize(rng.standard_normal((m, ksub, dsub)) / np.sqrt(dim))
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def quant_pd(vecs: pd.Series) -> pd.Series:
-        mat = np.array(vecs.tolist(), dtype=np.float64)
-        return pd.Series(list(quantize(mat)))
+    sums = [
+        F.sum(
+            F.element_at("xq", (F.col("sub") * dsub + F.lit(d + 1)).cast("int"))
+        ).alias(f"s{d}")
+        for d in range(dsub)
+    ]
 
-    cached = df.select(quant_pd(F.col(vec_col)).alias("xq")).persist()
-    xq = cached
-    try:
-        sums = [
-            F.sum(
-                F.element_at("xq", (F.col("sub") * dsub + F.lit(d + 1)).cast("int"))
-            ).alias(f"s{d}")
-            for d in range(dsub)
-        ]
-        for it in range(iters):
-            codes_pd = _pq_codes_udf(cb)
-            rows = (
-                xq.select(F.posexplode_outer(codes_pd("xq")).alias("sub", "code"), "xq")
-                .groupBy("sub", "code")
-                .agg(F.count(F.lit(1)).alias("n"), *sums)
-                .collect()
+    def partials(xq: DataFrame, cb: np.ndarray):
+        codes_pd = _pq_codes_udf(cb)
+        rows = (
+            xq.select(F.posexplode_outer(codes_pd("xq")).alias("sub", "code"), "xq")
+            .groupBy("sub", "code")
+            .agg(F.count(F.lit(1)).alias("n"), *sums)
+            .collect()
+        )
+        return [
+            (
+                (int(r["sub"]), int(r["code"])),
+                int(r["n"]),
+                [int(r[f"s{d}"]) for d in range(dsub)],
             )
-            if it == 0:
-                # each vector contributes one row per subspace — Σn/m is
-                # the training-set size, free from this iteration's rows
-                # (same fixed-overhead rationale as train_ivf_codebook)
-                n_rows = sum(int(r["n"]) for r in rows) // m
-                cur = xq.rdd.getNumPartitions()
-                want = max(1, min(cur, -(-n_rows // _LLOYD_ROWS_PER_TASK)))
-                if want < cur:
-                    xq = cached.coalesce(want)
-            new_cb = cb.copy()
-            for r in rows:
-                s, c, n = int(r["sub"]), int(r["code"]), int(r["n"])
-                new_cb[s][c] = [int(r[f"s{d}"]) // n for d in range(dsub)]
-            cb = new_cb
-        return cb
-    finally:
-        cached.unpersist()
+            for r in rows
+        ]
+
+    return _lloyd(df, vec_col, cb, iters, partials)
 
 
 def _pq_codes_udf(cb_q: np.ndarray):

@@ -47,33 +47,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..session import materialize
 from .neardup import portable_hash64
 
 HASH_BITS = 60  # portable_hash64 yields 15 hex digits
-
-_PERSISTED: list[DataFrame] = []
-
-
-def _materialized(df: DataFrame) -> DataFrame:
-    """Materialize-once (same hazard as ``bloom._materialized``): the CMS
-    probe joins the counter table d times, and an unpersisted counter
-    build (token explode + groupBy shuffle) would re-execute once PER
-    PROBE JOIN. Persist is lazy: probe 1 computes and caches, probes
-    2..d reuse."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
-    return df
-
-
-def release_cached() -> int:
-    """Unpersist every table pinned by this module; returns the count."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n
 
 
 def _rho_max(p: int) -> int:
@@ -447,7 +425,10 @@ def cms_estimate(
 
     w = 1 << w_log2
     h1, h2 = _h12(F.col(probe_col), salt)
-    cms = _materialized(cms)
+    # materialize once (same hazard as bloom_prune): the probe joins the
+    # counter table d times, and an unpersisted counter build would
+    # re-execute once PER PROBE JOIN
+    cms = materialize(cms)
     out = probes
     temp: list[str] = []
     for i in range(d):

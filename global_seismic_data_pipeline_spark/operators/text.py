@@ -13,6 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
+
+from ..session import materialize
 
 # Tiny per-language stopword signals for the heuristic language-ID.
 # Word-boundary alternations keep the regex RE2/Java-compatible.
@@ -25,19 +28,6 @@ LANG_STOPWORDS: dict[str, str] = {
 
 PUNCT_PATTERN = r"[^.,;:!?]"
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-_PERSISTED: list[DataFrame] = []
-
-
-def release_cached() -> int:
-    """Drop module-held persisted frames (bench hygiene: Spark's
-    CacheManager matches by logical plan, so a fresh identical pipeline
-    would silently reuse the previous run's cache)."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n
 
 
 def normalized(text: Column) -> Column:
@@ -495,12 +485,10 @@ def unigram_lm_surprisal(
     # tf is a diamond: it feeds the corpus LM AND the scoring join —
     # persist so the tokenize + aggregate chain runs once (same fix the
     # bigram operator already carries; CLAUDE.md's joined-k-times rule)
-    tf = (
-        toks.groupBy(id_col, "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
+    tf = materialize(
+        toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf")),
+        StorageLevel.MEMORY_AND_DISK_DESER,
     )
-    _PERSISTED.append(tf)
     uni = tf.groupBy("tok").agg(F.sum("tf").alias("corpus_cnt"))
     total = uni.agg(F.sum("corpus_cnt").alias("n_total"))
     lm = uni.crossJoin(F.broadcast(total)).select(
@@ -990,12 +978,10 @@ def bigram_lm_surprisal(
     )
     # tf is a diamond: it feeds the corpus model AND the scoring join —
     # persist so the tokenize + window + aggregate chain runs once.
-    tf = (
-        bi.groupBy(id_col, "w1", "w2")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
+    tf = materialize(
+        bi.groupBy(id_col, "w1", "w2").agg(F.count(F.lit(1)).alias("tf")),
+        StorageLevel.MEMORY_AND_DISK_DESER,
     )
-    _PERSISTED.append(tf)
     c12 = tf.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
     ctx = c12.groupBy("w1").agg(F.sum("c12").alias("ctx"))
     vocab = toks.agg(F.count_distinct("tok").alias("v"))

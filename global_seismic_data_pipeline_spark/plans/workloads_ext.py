@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..operators import (
     cluster,
@@ -36,6 +37,7 @@ BM25_TERMS = ["hash", "merge", "stream", "vector"]
 BM25_K = 25
 from ..operators.asof import asof_join
 from ..operators.partitioning import ensure_parallelism
+from ..session import materialize
 from ..sources.catalog import load_table
 
 
@@ -1202,10 +1204,9 @@ def vocab_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot hash raw array cells — same rule as jl_project_embeddings);
     library users get the ArrayType form from encode_docs directly."""
     d = _docs(spark, sf_dir)
-    # one persisted tokenization pass feeds the vocab build AND the
-    # encoding join (released by the bench via text.release_cached)
-    toks = text.token_rows(d).persist()
-    text._PERSISTED.append(toks)
+    # one materialized tokenization pass feeds the vocab build AND the
+    # encoding join (released with the caller's materialized_scope)
+    toks = materialize(text.token_rows(d), StorageLevel.MEMORY_AND_DISK_DESER)
     vocab = text.build_vocab(d, toks=toks)
     enc = text.encode_docs(d, vocab, toks=toks)
     return enc.select(
@@ -1224,10 +1225,11 @@ def cms_heavy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     beside the CMS estimate (always ≥, equal when collision-free in some
     row) — both exact integers, reproduced counter-for-counter by the
     DuckDB oracle."""
-    # toks feeds the exact top-20 AND the CMS counters — persist the
-    # diamond (released by the bench via text.release_cached)
-    toks = text.token_rows(_docs(spark, sf_dir)).persist()
-    text._PERSISTED.append(toks)
+    # toks feeds the exact top-20 AND the CMS counters — materialize the
+    # diamond (released with the caller's materialized_scope)
+    toks = materialize(
+        text.token_rows(_docs(spark, sf_dir)), StorageLevel.MEMORY_AND_DISK_DESER
+    )
     exact = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("exact_cnt"))

@@ -8,9 +8,12 @@ builder is used — only master/memory change.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -69,3 +72,46 @@ def tiny_df(spark: SparkSession, rows, schema):
     return spark.createDataFrame(
         spark.sparkContext.parallelize(list(rows), 1), schema
     )
+
+
+# Per-thread stack of open scopes, innermost last: foreachBatch bodies run
+# on a py4j callback thread, and a batch's scope must never release frames
+# the driver thread still holds (e.g. a range partitioning pinned between
+# its stats job and its rank pass).
+_SCOPES = threading.local()
+
+
+def materialize(
+    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
+) -> DataFrame:
+    """Persist ``df`` and record it in this thread's innermost open
+    :func:`materialized_scope`, which unpersists it on exit. With no scope
+    open the frame is only persisted (plain Spark ``persist``).
+
+    Persisted frames only: a ``localCheckpoint`` is not released here.
+    Neither ``unpersist`` nor ``catalog.clearCache`` drops its blocks, and
+    freeing the checkpoint RDD breaks every frame derived from it
+    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); Spark's ContextCleaner frees it
+    once nothing references it."""
+    df = df.persist(level)
+    stack = getattr(_SCOPES, "stack", None)
+    if stack:
+        stack[-1].append(df)
+    return df
+
+
+@contextlib.contextmanager
+def materialized_scope():
+    """On exit, unpersist every frame passed to :func:`materialize` inside
+    the block on this thread. Nested scopes release only their own frames
+    — but Spark's CacheManager matches plans, so a frame whose plan is
+    already cached shares that entry, and releasing either frees it."""
+    stack = _SCOPES.__dict__.setdefault("stack", [])
+    frames: list[DataFrame] = []
+    stack.append(frames)
+    try:
+        yield
+    finally:
+        stack.pop()
+        for df in frames:
+            df.unpersist()

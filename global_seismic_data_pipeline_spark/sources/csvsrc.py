@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import materialize
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -82,18 +84,6 @@ def read_csv(
     )
 
 
-_PERSISTED: list[DataFrame] = []
-
-
-def release_cached() -> int:
-    """Unpersist every table cached by this module; returns the count."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n
-
-
 def split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(good, quarantine): good rows without the corrupt column;
     quarantined raw lines for reprocessing/accounting.
@@ -102,11 +92,8 @@ def split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     one scan — CLAUDE.md persist rule), and Spark additionally disallows
     corrupt-column-only projections straight over a raw CSV file scan
     (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the persist
-    satisfies both. Release via ``release_cached()``."""
-    from pyspark.storagelevel import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
+    satisfies both. Released with the caller's ``materialized_scope``."""
+    df = materialize(df)
     good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw_line")

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
-from ..session import tiny_df
+from ..session import materialized_scope, tiny_df
 from ..sources.warehouse import Warehouse
 
 
@@ -468,74 +468,80 @@ def make_dedup_batch_fn(
     )
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # foreachBatch hands a DataFrame of a CLONED session; resolving the
-        # store tables through the outer session would mix sessions and read
-        # a stale relation cache (the clone's appends don't invalidate the
-        # outer session's cached file listing — batch N+1 would probe the
-        # store as it looked before batch 1). Bind a per-batch warehouse to
-        # the batch's own session: every probe resolves fresh.
-        bwh = Warehouse(batch_df.sparkSession, wh.root, wh.fmt)
-        epochs = f"{name}_epochs"
-        if bwh.exists(epochs) and (
-            bwh.read(epochs)
-            .filter(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-        ):
-            return  # committed batch redelivered — exact skip
-        # torn-replay scrub: any batch id already in the store means a
-        # prior attempt appended before crashing short of the epoch commit
-        scrub_batch_ids(bwh, batch_df, name=name)
-        log_tbl = f"{name}_pairs_log"
-        if bwh.exists(log_tbl):
-            stale = (
-                bwh.read(log_tbl)
+        # one scope per batch: the frames a batch materializes (the new
+        # index rows and bands) are released on exit, so a long-running
+        # stream pins nothing across micro-batches
+        with materialized_scope():
+            if batch_df.isEmpty():
+                return
+            # foreachBatch hands a DataFrame of a CLONED session; resolving
+            # the store tables through the outer session would mix sessions
+            # and read a stale relation cache (the clone's appends don't
+            # invalidate the outer session's cached file listing — batch N+1
+            # would probe the store as it looked before batch 1). Bind a
+            # per-batch warehouse to the batch's own session: every probe
+            # resolves fresh.
+            bwh = Warehouse(batch_df.sparkSession, wh.root, wh.fmt)
+            epochs = f"{name}_epochs"
+            if bwh.exists(epochs) and (
+                bwh.read(epochs)
                 .filter(F.col("batch_id") == batch_id)
                 .limit(1)
                 .count()
+            ):
+                return  # committed batch redelivered — exact skip
+            # torn-replay scrub: any batch id already in the store means a
+            # prior attempt appended before crashing short of the epoch commit
+            scrub_batch_ids(bwh, batch_df, name=name)
+            log_tbl = f"{name}_pairs_log"
+            if bwh.exists(log_tbl):
+                stale = (
+                    bwh.read(log_tbl)
+                    .filter(F.col("batch_id") == batch_id)
+                    .limit(1)
+                    .count()
+                )
+                if stale:
+                    bwh.overwrite(
+                        bwh.read(log_tbl).filter(
+                            F.col("batch_id") != batch_id
+                        ),
+                        log_tbl,
+                    )
+            pairs = incremental_minhash_pairs(
+                bwh, batch_df, text_col=text_col, threshold=threshold,
+                name=name, append=True,
             )
-            if stale:
-                bwh.overwrite(
-                    bwh.read(log_tbl).filter(F.col("batch_id") != batch_id),
-                    log_tbl,
-                )
-        pairs = incremental_minhash_pairs(
-            bwh, batch_df, text_col=text_col, threshold=threshold,
-            name=name, append=True,
-        )
-        bwh.append(
-            pairs.withColumn("batch_id", F.lit(batch_id)),
-            log_tbl,
-        )
-        if maintain_clusters:
-            edges = pairs.select("id_a", "id_b")
-            # no new pairs -> the cluster table is already current
-            if edges.limit(1).count():
-                ctable = f"{name}_clusters"
-                if bwh.exists(ctable):
-                    prev = bwh.read(ctable)
-                    comp = cluster_ops.incremental_components(prev, edges)
-                else:
-                    comp = cluster_ops.connected_components(edges)
-                bwh.overwrite(
-                    comp.select(
-                        F.col("id"), F.col("comp").alias("component")
-                    ),
-                    ctable,
-                )
-                cluster_ops.release_cached()
-        # commit the epoch LAST: everything above is now replay-safe —
-        # a crash before this append leaves a torn batch that the scrub
-        # path cleans on redelivery
-        bwh.append(
-            tiny_df(
-                batch_df.sparkSession, [(int(batch_id),)],
-                "batch_id long",
-            ),
-            epochs,
-        )
+            bwh.append(
+                pairs.withColumn("batch_id", F.lit(batch_id)),
+                log_tbl,
+            )
+            if maintain_clusters:
+                edges = pairs.select("id_a", "id_b")
+                # no new pairs -> the cluster table is already current
+                if edges.limit(1).count():
+                    ctable = f"{name}_clusters"
+                    if bwh.exists(ctable):
+                        prev = bwh.read(ctable)
+                        comp = cluster_ops.incremental_components(prev, edges)
+                    else:
+                        comp = cluster_ops.connected_components(edges)
+                    bwh.overwrite(
+                        comp.select(
+                            F.col("id"), F.col("comp").alias("component")
+                        ),
+                        ctable,
+                    )
+            # commit the epoch LAST: everything above is now replay-safe —
+            # a crash before this append leaves a torn batch that the scrub
+            # path cleans on redelivery
+            bwh.append(
+                tiny_df(
+                    batch_df.sparkSession, [(int(batch_id),)],
+                    "batch_id long",
+                ),
+                epochs,
+            )
 
     return dedup_batch
 

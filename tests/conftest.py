@@ -13,7 +13,10 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from global_seismic_data_pipeline_spark.schemas import BRONZE_EARTHQUAKES
-from global_seismic_data_pipeline_spark.session import get_spark
+from global_seismic_data_pipeline_spark.session import (
+    get_spark,
+    materialized_scope,
+)
 
 
 @pytest.fixture(scope="session")
@@ -25,6 +28,14 @@ def spark():
         extra_conf={"spark.sql.streaming.schemaInference": "false"},
     )
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _materialized_scope():
+    """Every test runs in its own scope: what it materializes is released
+    when it ends, so no cached frame leaks into the next test."""
+    with materialized_scope():
+        yield
 
 
 @pytest.fixture()

@@ -64,7 +64,6 @@ def test_matches_reference(spark, texts):
         for r in bpe.learn_merges(df, k=3).orderBy("step").collect()
     ]
     assert got == _ref_bpe(texts, 3)
-    bpe.release_cached()
 
 
 @pytest.mark.parametrize("threshold", [0.0, 1000.0])
@@ -86,7 +85,6 @@ def test_routing_paths_equivalent(spark, threshold):
         .orderBy("step")
         .collect()
     ]
-    bpe.release_cached()
     assert got == _ref_bpe(texts, 4)
 
 
@@ -97,7 +95,6 @@ def test_single_merge_on_run_word(spark):
     assert len(rows) == 1
     r = rows[0]
     assert (r.merged_pair, r.pair_count, r.symbols_after) == ("a a", 2, 2)
-    bpe.release_cached()
 
 
 def _ref_encode(texts, merges):
@@ -146,7 +143,6 @@ def test_encode_matches_reference_and_overlaps(spark):
     # spot-pin the interesting rows
     assert got[0] == (6, "aa aa abc x y z")
     assert got[1] == (4, "abc abc d aa")
-    bpe.release_cached()
 
 
 def test_encode_reproduces_trainer_state(spark):
@@ -161,4 +157,3 @@ def test_encode_reproduces_trainer_state(spark):
     merges = [tuple(r.merged_pair.split(" ")) for r in audit]
     enc = bpe.encode_with_merges(df, merges).collect()
     assert sum(r.n_tokens for r in enc) == audit[-1].symbols_after
-    bpe.release_cached()

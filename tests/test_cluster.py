@@ -95,7 +95,6 @@ def test_random_graphs_match_union_find(spark, seed):
     out = cluster.connected_components(_edges_df(spark, pairs)).collect()
     got = {r.id: r.comp for r in out}
     assert got == expected
-    cluster.release_cached()
 
 
 class TestPagerankInteger:
@@ -119,7 +118,6 @@ class TestPagerankInteger:
         df = spark.createDataFrame(edges, "src long, dst long")
         got = {r.node: r.pagerank_q for r in cluster.pagerank_integer(df).collect()}
         assert got == self._ref(edges)
-        cluster.release_cached()
 
     def test_sink_node_and_degrees(self, spark):
         # node 2 is a sink (no out-edges): keeps only the base share;
@@ -133,7 +131,6 @@ class TestPagerankInteger:
         # sources end at exactly the base share after >=2 iters
         base = ((1 << 20) * 15) // 100
         assert rows[0].pagerank_q == base
-        cluster.release_cached()
 
 
 def test_incremental_components_equal_full_recompute(spark):
@@ -167,7 +164,6 @@ def test_incremental_components_equal_full_recompute(spark):
             for r in cluster.connected_components(full).collect()
         }
         assert inc == want, seed
-        cluster.release_cached()
 
 
 def test_incremental_components_internal_edges_noop(spark):
@@ -183,7 +179,6 @@ def test_incremental_components_internal_edges_noop(spark):
         for r in cluster.incremental_components(prev, internal).collect()
     }
     assert out == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-    cluster.release_cached()
 
 
 def test_incremental_components_bridges_and_new_nodes(spark):
@@ -205,4 +200,3 @@ def test_incremental_components_bridges_and_new_nodes(spark):
     assert out == {
         (5, 1), (6, 1), (9, 1), (12, 1), (1, 1), (100, 100), (101, 100)
     }
-    cluster.release_cached()

@@ -400,7 +400,6 @@ def test_prefix_filter_shrinks_the_index(spark, doc_df):
         F.col("pos") <= F.col("s") - F.expr("((s * 4) + 4) div 5") + 1
     ).count()
     assert 0 < prefix_n < total / 2
-    neardup.release_cached()
 
 
 def test_prefix_filter_validation(spark, doc_df):

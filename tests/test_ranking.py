@@ -174,7 +174,6 @@ def test_prefix_sums_equal_single_partition_window(spark):
     g = {(r.k, r.tie): (r.x_cum, r.y_cum) for r in got.collect()}
     e = {(r.k, r.tie): (r.x_cum, r.y_cum) for r in want.collect()}
     assert g == e
-    ranking.release_cached()
 
 
 def test_prefix_sums_descending_and_validation(spark):
@@ -197,4 +196,3 @@ def test_prefix_sums_descending_and_validation(spark):
         ranking.prefix_sums(
             df.withColumn("f", F.lit(1.5)), ["k"], ["f"]
         )
-    ranking.release_cached()

@@ -8,7 +8,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from global_seismic_data_pipeline_spark.operators import cluster, neardup
 from global_seismic_data_pipeline_spark.operators.neardup_incremental import (
     build_minhash_index,
     incremental_minhash_pairs,
@@ -76,8 +75,6 @@ def test_committed_batch_redelivery_is_noop(spark, wh):
     assert _snapshot(wh, "rp1") == snap
     fn(b0, 0)  # stale redelivery of an older batch
     assert _snapshot(wh, "rp1") == snap
-    neardup.release_cached()
-    cluster.release_cached()
 
 
 def test_torn_replay_scrubs_and_reprocesses(spark, wh, tmp_path):
@@ -115,8 +112,6 @@ def test_torn_replay_scrubs_and_reprocesses(spark, wh, tmp_path):
     # sanity: the cross-batch exact dup survived the scrub exactly once
     pair_keys = [(r[0], r[1]) for r in got["_pairs_log"]]
     assert pair_keys.count((0, 3)) == 1
-    neardup.release_cached()
-    cluster.release_cached()
 
 
 def test_upsert_sink_merge_batch_redelivery(spark, wh):

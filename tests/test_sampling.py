@@ -298,8 +298,6 @@ def test_leakage_safe_split_keeps_near_dups_together(spark):
     for d, c in cluster_of.items():
         naive_by_cluster.setdefault(c, set()).add(naive_of[d])
     assert any(len(s) > 1 for s in naive_by_cluster.values())
-    neardup.release_cached()
-    cluster.release_cached()
 
 
 def test_epoch_repeats_realizes_fractional_epochs(spark):
@@ -346,16 +344,19 @@ def test_epoch_repeats_realizes_fractional_epochs(spark):
 
 
 def test_seeded_shuffle_shards_balance_determinism_and_reseed(spark):
-    from global_seismic_data_pipeline_spark.operators import ranking, sampling
+    from global_seismic_data_pipeline_spark.operators import sampling
+    from global_seismic_data_pipeline_spark.session import materialized_scope
 
     df = spark.createDataFrame([(i,) for i in range(103)], "doc_id long")
-    out1 = {
-        r.doc_id: (r.shard, r.pos)
-        for r in sampling.seeded_shuffle_shards(
-            df, n_shards=8, seed="e0"
-        ).collect()
-    }
-    ranking.release_cached()
+    # each run in its own scope: the next one re-samples its range
+    # partitioning instead of reusing this run's cached one
+    with materialized_scope():
+        out1 = {
+            r.doc_id: (r.shard, r.pos)
+            for r in sampling.seeded_shuffle_shards(
+                df, n_shards=8, seed="e0"
+            ).collect()
+        }
     # every doc placed exactly once; shards balanced to within one row
     assert len(out1) == 103
     sizes = {}
@@ -367,22 +368,22 @@ def test_seeded_shuffle_shards_balance_determinism_and_reseed(spark):
         s + 8 * p for s, p in out1.values()
     ) == list(range(103))
     # deterministic: same seed → identical placement
-    out1b = {
-        r.doc_id: (r.shard, r.pos)
-        for r in sampling.seeded_shuffle_shards(
-            df, n_shards=8, seed="e0"
-        ).collect()
-    }
-    ranking.release_cached()
+    with materialized_scope():
+        out1b = {
+            r.doc_id: (r.shard, r.pos)
+            for r in sampling.seeded_shuffle_shards(
+                df, n_shards=8, seed="e0"
+            ).collect()
+        }
     assert out1b == out1
     # a new seed is a genuinely different permutation
-    out2 = {
-        r.doc_id: (r.shard, r.pos)
-        for r in sampling.seeded_shuffle_shards(
-            df, n_shards=8, seed="e1"
-        ).collect()
-    }
-    ranking.release_cached()
+    with materialized_scope():
+        out2 = {
+            r.doc_id: (r.shard, r.pos)
+            for r in sampling.seeded_shuffle_shards(
+                df, n_shards=8, seed="e1"
+            ).collect()
+        }
     assert out2 != out1
     # and not id-ordered (it is a shuffle)
     by_slot = sorted(out1, key=lambda d: out1[d][0] + 8 * out1[d][1])

@@ -54,7 +54,6 @@ def test_scores_match_reference(spark):
     rows = search.bm25_topk(_mini_corpus(spark), terms, k=10).collect()
     got = {r.doc_id: (r.score, r.n_terms_matched, r.dl) for r in rows}
     assert got == pytest.approx(expected)
-    search.release_cached()
 
 
 def test_topk_order_and_cutoff(spark):
@@ -64,13 +63,11 @@ def test_topk_order_and_cutoff(spark):
     # length normalization; verify descending order with deterministic ties
     scores = [r.score for r in rows]
     assert scores == sorted(scores, reverse=True)
-    search.release_cached()
 
 
 def test_unmatched_docs_excluded(spark):
     rows = search.bm25_topk(_mini_corpus(spark), ["shuffle"], k=10).collect()
     assert [r.doc_id for r in rows] == [1]
-    search.release_cached()
 
 
 def test_validation(spark):
@@ -113,7 +110,6 @@ def test_tfidf_scores_match_reference(spark):
     rows = search.tfidf_topk(_mini_corpus(spark), terms, k=10).collect()
     got = {r.doc_id: (r.tfidf_cosine, r.n_terms_matched, r.dot_q) for r in rows}
     assert got == pytest.approx(expected)
-    search.release_cached()
 
 
 def test_tfidf_idf_downweights_common_terms(spark):
@@ -134,7 +130,6 @@ def test_tfidf_idf_downweights_common_terms(spark):
     # doc 4 matches 'rare' (df=1, idf=3); docs 1-3 match 'alpha'
     # (df=4 of 4, idf=1) — rarity must dominate
     assert got[4] > max(got[1], got[2], got[3])
-    search.release_cached()
 
 
 def test_phrase_search_counts_overlapping_occurrences(spark):

@@ -369,7 +369,6 @@ def test_streaming_incremental_dedup_equals_batch_operator(spark, tmp_path):
     }
     assert got == want
     assert (0, 3) in got and got[(0, 3)] == 1.0  # exact dup found cross-batch
-    neardup.release_cached()
 
 
 def test_windowed_quantile_histogram_matches_batch(spark, stream_dir):
@@ -459,8 +458,31 @@ def test_streaming_dedup_maintains_cluster_table(spark, tmp_path):
     # the two base-doc variants and the exact dup form one component
     comp_of = dict(got)
     assert comp_of[0] == comp_of[1] == comp_of[3] == 0
-    cluster.release_cached()
-    neardup.release_cached()
+
+
+def test_dedup_batch_fn_releases_what_each_batch_cached(spark, tmp_path):
+    """Each micro-batch of the dedup sink releases the frames it cached
+    (the new index rows and bands): four batches leave no new persistent
+    RDD behind."""
+    from global_seismic_data_pipeline_spark.operators.neardup_incremental import (
+        build_minhash_index,
+    )
+
+    schema = "doc_id long, text string"
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    docs = [(i, f"{base} {i % 3} {'x' * (i % 2)}") for i in range(8)]
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    build_minhash_index(wh, spark.createDataFrame([], schema), bands=16, name="lk")
+    fn = facade.make_dedup_batch_fn(wh, name="lk", maintain_clusters=False)
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keys())
+    for b in range(4):
+        fn(spark.createDataFrame(docs[2 * b: 2 * b + 2], schema), b)
+    assert wh.read("lk_epochs").count() == 4
+    # compared as ids, not counts: Spark's ContextCleaner may free older
+    # RDDs (e.g. earlier tests' local checkpoints) meanwhile
+    assert set(persistent().keys()) - before == set()
 
 
 def test_materialized_view_sink_continuous_ivm(spark, stream_dir, tmp_path):

@@ -11,7 +11,6 @@ from global_seismic_data_pipeline_spark.operators import cluster
 def _count(spark, edges):
     df = spark.createDataFrame(edges, ["a", "b"])
     out = cluster.triangle_count(df, src="a", dst="b").collect()[0].asDict()
-    cluster.release_cached()
     return out
 
 

@@ -158,7 +158,10 @@ def main() -> int:
 
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     import __spark_entry__ as ent
-    from global_seismic_data_pipeline_spark.session import get_spark
+    from global_seismic_data_pipeline_spark.session import (
+        get_spark,
+        materialized_scope,
+    )
 
     spark = get_spark("correctness-check")
     con = duckdb.connect()
@@ -177,7 +180,10 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            # release what the query cached once it is collected, so blocks
+            # do not pile up across the sweep
+            with materialized_scope():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             failed.append(name)
