@@ -12,7 +12,8 @@ A composable, tested library — not a notebook port. Modules:
 - ``functions``  — native column expressions (physics, cleaning, temporal, risk)
 - ``operators``  — reusable distributed operators (dedup, spatial join, bands,
                    rolling, as-of join, near-dup, similarity, text,
-                   multimodal, skew salting, partitioning hygiene)
+                   binary payload metadata, skew salting, partitioning
+                   hygiene)
 - ``pipeline``   — medallion stages (bronze, silver, gold, reports,
                    maintenance, runner DAG)
 - ``plans``      — driver-facing workloads + DuckDB oracles

@@ -49,7 +49,9 @@ from collections.abc import Mapping, Sequence
 from functools import reduce
 
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from ..session import materialize, materialized_scope
 from ..sources.deltawh import DeltaLogWarehouse
 
 META_SUFFIX = "__ivm_meta"
@@ -215,8 +217,8 @@ def refresh_agg_view(wh: DeltaLogWarehouse, view: str) -> dict:
     )
     # persist: the changed-count action and the view overwrite both
     # consume `merged` — unpersisted, the feed diff would execute twice
-    merged = merged.persist()
-    try:
+    with materialized_scope():
+        merged = materialize(merged, StorageLevel.MEMORY_AND_DISK_DESER)
         changed = merged.filter("__touched").count()
         alive = merged.filter(F.col(count_col) > 0)
         if mm:
@@ -259,8 +261,6 @@ def refresh_agg_view(wh: DeltaLogWarehouse, view: str) -> dict:
             alive = norm.unionByName(fixed)
         new_view = alive.drop("__touched", "__recompute")
         wh.overwrite(new_view, view)
-    finally:
-        merged.unpersist()
     _write_meta(  # meta LAST — see crash discipline
         wh, view, source, meta_row["keys"], meta_row["aggs"],
         latest, wh.latest_version(view),

@@ -1,38 +1,24 @@
 """Multimodal column handling: opaque binary payloads + typed metadata.
 
-Design for image/audio/video at 100 TB: media travels as a ``binary``
-column with typed metadata columns beside it; decode / feature-extract /
-resize / frame-sample run as Arrow-batched ``mapInPandas`` stages so bytes
-stream through Python in columnar batches (never row-at-a-time), and the
-surrounding plan (partitioning, predicate pushdown on metadata, column
-pruning of the heavy payload) stays fully native.
+Media travels as a ``binary`` column with typed metadata columns beside
+it. Metadata extraction runs as an Arrow-batched ``mapInPandas`` stage, so
+bytes stream through Python in columnar batches (never row-at-a-time)
+while the surrounding plan — partitioning, predicate pushdown on metadata,
+column pruning of the heavy payload — stays native.
 
-Codec support is split by what this environment can actually decode.
-BMP, PNG, baseline JPEG and PCM WAV have REAL built-in codecs
-(operators/codecs.py, operators/jpegcodec.py) — decode, nearest-neighbor
-resize, audio feature extraction, and frame slicing operate on real
-pixels/samples. MP4/MP3 resolve at the CONTAINER level without ffmpeg
-(operators/mediameta.py): box-walk metadata, exact MP3 frame-walk
-durations, and ISO-BMFF sample-table demux into raw track samples; only
-the sample DECODE (h264/aac/mpeg audio) still needs ffmpeg and stays
-behind documented NotImplementedError guards.
-``fake=True`` selects a deterministic stand-in so the distributed
-plumbing is testable on arbitrary payloads. The
-Spark-side plumbing — schema, batch iteration, payload pruning — is real
-and tested in all modes.
+The per-batch decoder is a deterministic stand-in derived from the bytes,
+so the distributed plumbing works on arbitrary (e.g. text-derived)
+payloads and has a SQL oracle (``multimodal_metadata``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from . import codecs
 
 METADATA_SCHEMA = (
     "doc_id long, payload_bytes long, header_byte long, width long, height long"
@@ -46,24 +32,9 @@ def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8"))
 
 
-def decode_image_batch(payloads: pd.Series, *, fake: bool = False) -> pd.DataFrame:
-    """Decode a batch of image payloads to (width, height, header_byte).
-
-    Real path (``fake=False``): BMP and PNG payloads are decoded with the
-    stdlib+numpy codecs (:func:`codecs.decode_image`) — width/height come
-    from actual pixel data; baseline JPEG decodes via
-    :mod:`.jpegcodec` (progressive raises NotImplementedError). ``fake=True`` uses a deterministic stand-in
-    derived from the bytes so the distributed plumbing is testable on
-    arbitrary payloads."""
-    if not fake:
-        recs = []
-        for b in payloads:
-            b = bytes(b)
-            _, px = codecs.decode_image(b)
-            recs.append((len(b), b[0], px.shape[1], px.shape[0]))
-        return pd.DataFrame(
-            recs, columns=["payload_bytes", "header_byte", "width", "height"]
-        ).astype("int64")
+def decode_image_batch(payloads: pd.Series) -> pd.DataFrame:
+    """A batch of payloads → (payload_bytes, header_byte, width, height),
+    with width/height a deterministic function of the bytes."""
     lengths = payloads.map(len)
     # header as the first CHARACTER's codepoint (UTF-8 decode), not the
     # first raw byte: byte 0 of a multi-byte char is encoding-dependent
@@ -78,318 +49,23 @@ def decode_image_batch(payloads: pd.Series, *, fake: bool = False) -> pd.DataFra
         {
             "payload_bytes": lengths.astype("int64"),
             "header_byte": first.astype("int64"),
-            # fake dims: deterministic function of the payload
             "width": (lengths % 640).astype("int64"),
             "height": (first.astype("int64") * 3 % 480),
         }
     )
 
 
-def extract_metadata(
-    df: DataFrame, *, id_col: str = "doc_id", fake: bool = True
-) -> DataFrame:
+def extract_metadata(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     """mapInPandas metadata extraction over the binary payload.
 
     Arrow-batched; only (id, payload) reach Python — Spark prunes all other
-    columns. Output is the typed metadata table. ``fake=False`` selects the
-    real BMP codec (see :func:`decode_image_batch`); the default keeps the
-    deterministic stand-in so arbitrary (e.g. text-derived) payloads work —
-    the driver's ``multimodal_metadata`` query relies on that."""
+    columns. Output is the typed metadata table."""
     pruned = df.select(id_col, "payload")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            meta = decode_image_batch(pdf["payload"], fake=fake)
+            meta = decode_image_batch(pdf["payload"])
             meta.insert(0, "doc_id", pdf[id_col].astype("int64").to_numpy())
             yield meta
 
     return pruned.mapInPandas(gen, schema=METADATA_SCHEMA)
-
-
-RESIZED_SCHEMA = "doc_id long, payload binary, out_width long, out_height long"
-
-
-def resize_images(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    width: int = 224,
-    height: int = 224,
-    fake: bool = False,
-) -> DataFrame:
-    """Resize image payloads to (width, height) via mapInPandas.
-
-    Real path (``fake=False``): BMP/PNG payloads are decoded, resampled
-    with the pixel-center nearest-neighbor kernel
-    (:func:`codecs.resize_nearest`, PIL-NEAREST-compatible grid), and
-    re-encoded in their ORIGINAL format — a genuine pixels-in/pixels-out
-    transform with no external libraries (BMP, PNG and baseline JPEG).
-    ``fake=True`` emits a deterministic truncated/padded byte
-    payload of width*height bytes so the Arrow batch shape, schema, and
-    pruning are exercised on arbitrary payloads."""
-
-    def _resize_real(b) -> bytes:
-        kind, px = codecs.decode_image(bytes(b))
-        return codecs.encode_image(kind, codecs.resize_nearest(px, width, height))
-
-    def resize_batch(payloads: pd.Series) -> pd.Series:
-        if not fake:
-            return payloads.map(_resize_real)
-        target = width * height
-        return payloads.map(
-            lambda b: bytes(b[:target]).ljust(target, b"\0")
-        )
-
-    pruned = df.select(id_col, "payload")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "payload": resize_batch(pdf["payload"]),
-                    "out_width": width,
-                    "out_height": height,
-                }
-            )
-
-    return pruned.mapInPandas(gen, schema=RESIZED_SCHEMA)
-
-
-FRAMES_SCHEMA = "doc_id long, frame_idx long, frame binary"
-
-
-def sample_frames(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    every_n_bytes: int = 64,
-    max_frames: int = 8,
-    fake: bool = False,
-) -> DataFrame:
-    """Sample 'frames' from a video payload — a 1→N mapInPandas expansion
-    (the multimodal analogue of explode, but batched through Arrow).
-
-    Real path (``fake=False``): payloads that are a concatenation of BMP
-    images (a naive motion-BMP container — each frame's byte length sits in
-    its own header at offset 2) are split into per-frame BMP payloads by
-    walking the declared sizes; MP4 payloads DEMUX through the ISO-BMFF
-    sample tables (:func:`.mediameta.mp4_extract_samples` — stsz/stsc/
-    stco box walk, pure struct) into raw undecoded track samples — the
-    container layer is real; DECODING those h264/aac samples is where
-    ffmpeg would start, and stays guarded. ``max_frames`` caps the
-    expansion. Anything else raises NotImplementedError. With
-    ``fake=True`` each frame is a fixed-stride byte slice; all modes
-    share the exact batch contract (one output row per sampled frame)."""
-
-    pruned = df.select(id_col, "payload")
-
-    def _split_bmp_frames(b: bytes) -> list[bytes]:
-        kind = codecs.sniff(b)
-        if kind == "mp4":
-            from .mediameta import mp4_extract_samples
-
-            return mp4_extract_samples(b, max_samples=max_frames)
-        if kind != "bmp":
-            raise NotImplementedError(
-                f"frame sampling from {kind or 'unknown'} payloads requires "
-                "ffmpeg — concatenated-BMP and MP4 containers have built-in "
-                "parsers; pass fake=True for the deterministic stand-in"
-            )
-        frames, off = [], 0
-        while off + codecs.BMP_HEADER_SIZE <= len(b) and len(frames) < max_frames:
-            if b[off:off + 2] != b"BM":
-                break
-            size = int.from_bytes(b[off + 2:off + 6], "little")
-            if size < codecs.BMP_HEADER_SIZE or off + size > len(b):
-                break
-            frames.append(b[off:off + size])
-            off += size
-        return frames
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not fake:
-            for pdf in batches:
-                ids, idxs, frames = [], [], []
-                for i, b in zip(pdf[id_col].astype("int64"), pdf["payload"]):
-                    for j, fr in enumerate(_split_bmp_frames(bytes(b))):
-                        ids.append(i)
-                        idxs.append(j)
-                        frames.append(fr)
-                yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame": frames})
-            return
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for i, b in zip(pdf[id_col].astype("int64"), pdf["payload"]):
-                for j in range(min(max_frames, max(len(b) // every_n_bytes, 0))):
-                    ids.append(i)
-                    idxs.append(j)
-                    frames.append(bytes(b[j * every_n_bytes:(j + 1) * every_n_bytes]))
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return pruned.mapInPandas(gen, schema=FRAMES_SCHEMA)
-
-
-AUDIO_SCHEMA = (
-    "doc_id long, sample_rate long, num_samples long, duration_s double, "
-    "rms double, peak long"
-)
-
-
-def extract_audio_features(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Decode PCM WAV payloads and compute per-clip features via mapInPandas.
-
-    REAL codec (stdlib ``wave`` + numpy, :func:`codecs.decode_wav`): output
-    is (sample_rate, num_samples, duration_s, rms, peak) from actual
-    samples. Same distributed shape as :func:`extract_metadata` — only
-    (id, payload) reach Python, Arrow-batched, metadata-only result so the
-    heavy payload never travels further than this stage.
-
-    MP3 payloads resolve at the METADATA level (:mod:`.mediameta` frame
-    walk — exact sample_rate / num_samples / duration from the frame
-    headers); their sample-dependent features (rms, peak) are NULL, since
-    actual MPEG audio decode still needs ffmpeg. Anything else raises
-    NotImplementedError."""
-    from .mediameta import parse_mp3_meta
-
-    pruned = df.select(id_col, "payload")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for i, b in zip(pdf[id_col].astype("int64"), pdf["payload"]):
-                b = bytes(b)
-                kind = codecs.sniff(b)
-                if kind == "mp3":
-                    m = parse_mp3_meta(b)
-                    recs.append((
-                        int(i), m["sample_rate"], m["total_samples"],
-                        m["duration_s"], None, None,
-                    ))
-                    continue
-                if kind != "wav":
-                    raise NotImplementedError(
-                        f"decoding {kind or 'unknown'} audio requires "
-                        "ffmpeg — PCM WAV decodes built-in; MP3 resolves "
-                        "at the metadata level"
-                    )
-                samples, rate = codecs.decode_wav(b)
-                n = int(samples.size)
-                x = samples.astype(np.float64)
-                recs.append((
-                    int(i), rate, n,
-                    n / rate if rate else 0.0,
-                    float(np.sqrt(np.mean(x * x))) if n else 0.0,
-                    int(np.max(np.abs(x))) if n else 0,
-                ))
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "doc_id", "sample_rate", "num_samples",
-                    "duration_s", "rms", "peak",
-                ],
-            )
-
-    return pruned.mapInPandas(gen, schema=AUDIO_SCHEMA)
-
-
-PHASH_SCHEMA = "doc_id long, phash long"
-
-
-def _dct_matrix_n(n: int) -> np.ndarray:
-    """Orthonormal n-point DCT-II matrix (the jpegcodec 8-point matrix,
-    generalized): forward F = T @ f @ T.T."""
-    idx = np.arange(n)
-    k = idx.reshape(-1, 1)
-    t = np.cos((2 * idx + 1) * k * np.pi / (2 * n)) * np.sqrt(2 / n)
-    t[0, :] = np.sqrt(1 / n)
-    return t
-
-
-def phash64(pixels: np.ndarray) -> int:
-    """64-bit perceptual hash of an (h, w, 3) uint8 image (the classic
-    pHash construction): integer luma → nearest-resize to 32×32 → 2-D
-    DCT-II → top-left 8×8 low-frequency block → bit j set iff
-    coefficient j exceeds the block's median (DC excluded from the
-    median — it is pure brightness). Deterministic numpy end-to-end;
-    robust to re-encoding, format conversion, resizing and uniform
-    brightness shifts, because those barely move low-frequency DCT
-    ratios."""
-    small = codecs.resize_nearest(pixels, 32, 32).astype(np.int64)
-    # integer luma (ITU-R 601 weights scaled to /256)
-    gray = (77 * small[:, :, 0] + 150 * small[:, :, 1] + 29 * small[:, :, 2]) >> 8
-    t = _dct_matrix_n(32)
-    coeffs = t @ gray.astype(np.float64) @ t.T
-    block = coeffs[:8, :8]
-    med = np.median(np.concatenate((block.flat[1:],)))
-    bits = (block.flatten() > med).astype(np.uint64)
-    h = np.uint64(0)
-    for j in range(64):
-        h |= bits[j] << np.uint64(j)
-    return int(h.astype(np.int64))  # two's-complement into Spark's long
-
-
-def phash_images(
-    df: DataFrame, *, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """(id, phash) via mapInPandas over binary payloads — decodes
-    BMP/PNG/baseline-JPEG with the built-in codecs. Map-side only; the
-    payload column is pruned away after hashing so downstream joins ship
-    8 bytes per image, not the image."""
-    pruned = df.select(id_col, payload_col)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = [
-                phash64(codecs.decode_image(bytes(b))[1])
-                for b in pdf[payload_col]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), "phash": hashes}
-            )
-
-    return pruned.mapInPandas(gen, schema=PHASH_SCHEMA)
-
-
-PHASH_BANDS, PHASH_CHUNK_BITS = 4, 16
-
-
-def phash_near_dup_pairs(
-    hashes: DataFrame, *, id_col: str = "doc_id", max_hamming: int = 3
-) -> DataFrame:
-    """Image near-dup pairs by banded pHash (same pigeonhole as SimHash:
-    4 × 16-bit chunks — any pair within Hamming distance 3 shares an
-    exact chunk, so the band join has FULL recall at ≤ 3) verified by
-    exact ``bit_count(xor)``. The join ships (id, band, chunk) only."""
-    mask = (1 << PHASH_CHUNK_BITS) - 1
-    banded = hashes.select(
-        F.col(id_col),
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned("phash", i * PHASH_CHUNK_BITS)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("chunk"),
-                    )
-                    for i in range(PHASH_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select(F.col(id_col), "phash", F.col("bb.band"), F.col("bb.chunk"))
-    left = banded.select(
-        F.col(id_col).alias("id_a"), F.col("phash").alias("ph_a"), "band", "chunk"
-    )
-    right = banded.select(
-        F.col(id_col).alias("id_b"), F.col("phash").alias("ph_b"), "band", "chunk"
-    )
-    return (
-        left.join(right, ["band", "chunk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )

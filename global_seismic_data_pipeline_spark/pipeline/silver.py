@@ -11,12 +11,14 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..functions import cleaning, physics
 from ..functions.risk import depth_category, risk_level
 from ..functions.temporal import with_temporal_features
 from ..operators.spatial import enrich_point_in_box
 from ..refdata import tectonic_regions
+from ..session import materialize, materialized_scope
 from ..state import WatermarkStore
 from ..sources.warehouse import Warehouse
 from .bronze import BRONZE_TABLE
@@ -103,8 +105,8 @@ def run_silver(
     # join/physics chain re-executes ~3x per run. One job computes the
     # three driver-side facts the reference takes three actions for
     # (04:46, 04:213, 04:214).
-    silver = silver.persist()
-    try:
+    with materialized_scope():
+        silver = materialize(silver, StorageLevel.MEMORY_AND_DISK_DESER)
         stats = silver.agg(
             F.count(F.lit(1)).alias("n"), F.max("event_time").alias("max_t")
         ).collect()[0]
@@ -115,5 +117,3 @@ def run_silver(
         )
         store.advance(SILVER_TABLE, stats.max_t, stats.n)
         return stats.n
-    finally:
-        silver.unpersist()

@@ -35,7 +35,9 @@ from collections.abc import Sequence
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
+from ..session import materialize, materialized_scope
 from . import deltalog as dl
 from .warehouse import Warehouse
 
@@ -503,66 +505,69 @@ class DeltaLogWarehouse(Warehouse):
         ]
         own_cdc = self._pending_cdc_df is None and self._cdf_enabled(name)
         matched = raw.filter(match)
-        if own_cdc:
-            # ONE probe scan: the affected-file collect AND the change
-            # rows both read the cache (same shape as delete_with_dv)
-            matched = matched.persist()
-        try:
-            affected = [
-                rel_of_uri[r["__dv_file"]]
-                for r in matched.select("__dv_file").distinct().collect()
-            ]
-            batch = df.select(*logical)
-            if affected:
-                aff_adds = [state["files"][rel] for rel in affected]
-                survivors = dl._scan_adds(
-                    self.spark, path, aff_adds, state
-                ).filter(~match).select(*logical)
-                out = survivors.unionByName(batch)
-            else:
-                out = batch
+        with materialized_scope():
             if own_cdc:
-                self._pending_cdc_df = (
-                    matched.select(*logical)
-                    .withColumn("_change_type", F.lit("delete"))
-                    .unionByName(
-                        batch.withColumn("_change_type", F.lit("insert"))
-                    )
+                # ONE probe scan: the affected-file collect AND the change
+                # rows both read the cache (same shape as delete_with_dv)
+                matched = materialize(
+                    matched, StorageLevel.MEMORY_AND_DISK_DESER
                 )
-            probed = {rel: state["files"][rel] for rel in affected}
-
-            def removes_fn(prev) -> list[str]:
-                # staleness gate inside the OCC retry loop: the staged
-                # survivors were computed from the PROBED records — a
-                # concurrently rewritten/DV'd affected file, or any
-                # concurrent add (which might land rows inside the
-                # replaced region), invalidates them. Refuse like
-                # delta-spark's conflict checker instead of silently
-                # duplicating/resurrecting rows.
-                for rel, rec in probed.items():
-                    if prev["files"].get(rel) != rec:
-                        raise dl.DeltaConcurrentWriteError(
-                            f"replaceWhere: affected file {rel!r} "
-                            "changed under this write — restage"
+            try:
+                affected = [
+                    rel_of_uri[r["__dv_file"]]
+                    for r in matched.select("__dv_file").distinct()
+                    .collect()
+                ]
+                batch = df.select(*logical)
+                if affected:
+                    aff_adds = [state["files"][rel] for rel in affected]
+                    survivors = dl._scan_adds(
+                        self.spark, path, aff_adds, state
+                    ).filter(~match).select(*logical)
+                    out = survivors.unionByName(batch)
+                else:
+                    out = batch
+                if own_cdc:
+                    self._pending_cdc_df = (
+                        matched.select(*logical)
+                        .withColumn("_change_type", F.lit("delete"))
+                        .unionByName(
+                            batch.withColumn("_change_type", F.lit("insert"))
                         )
-                fresh = set(prev["files"]) - set(state["files"])
-                if fresh:
-                    raise dl.DeltaConcurrentWriteError(
-                        "replaceWhere: a concurrent writer added "
-                        f"{len(fresh)} file(s) under this write (they "
-                        "may hold rows inside the replaced region) — "
-                        "restage"
                     )
-                return list(probed)
+                probed = {rel: state["files"][rel] for rel in affected}
 
-            self._commit_df(
-                out, name, "append", self.partition_columns(name),
-                removes_fn=removes_fn, operation="REPLACE WHERE",
-            )
-        finally:
-            if own_cdc:
-                self._pending_cdc_df = None
-                matched.unpersist()
+                def removes_fn(prev) -> list[str]:
+                    # staleness gate inside the OCC retry loop: the staged
+                    # survivors were computed from the PROBED records — a
+                    # concurrently rewritten/DV'd affected file, or any
+                    # concurrent add (which might land rows inside the
+                    # replaced region), invalidates them. Refuse like
+                    # delta-spark's conflict checker instead of silently
+                    # duplicating/resurrecting rows.
+                    for rel, rec in probed.items():
+                        if prev["files"].get(rel) != rec:
+                            raise dl.DeltaConcurrentWriteError(
+                                f"replaceWhere: affected file {rel!r} "
+                                "changed under this write — restage"
+                            )
+                    fresh = set(prev["files"]) - set(state["files"])
+                    if fresh:
+                        raise dl.DeltaConcurrentWriteError(
+                            "replaceWhere: a concurrent writer added "
+                            f"{len(fresh)} file(s) under this write (they "
+                            "may hold rows inside the replaced region) — "
+                            "restage"
+                        )
+                    return list(probed)
+
+                self._commit_df(
+                    out, name, "append", self.partition_columns(name),
+                    removes_fn=removes_fn, operation="REPLACE WHERE",
+                )
+            finally:
+                if own_cdc:
+                    self._pending_cdc_df = None
         return {"files_replaced": len(affected)}
 
     def overwrite_dynamic(self, df: DataFrame, name: str) -> dict[str, int]:
@@ -675,6 +680,9 @@ class DeltaLogWarehouse(Warehouse):
     # _change_type) through _commit_df, which stages them under
     # _change_data/ and publishes the cdc actions IN THE SAME commit
     _pending_cdc_df: DataFrame | None = None
+    # a MERGE into an existing table threads its history operation the
+    # same way (an explicit ``operation`` argument still wins)
+    _pending_operation: str | None = None
 
     def _table_conf(self, name: str) -> dict:
         if not dl.is_delta_table(self.path(name)):
@@ -743,12 +751,17 @@ class DeltaLogWarehouse(Warehouse):
                 "_change_type", F.lit("insert")
             )
             self._pending_cdc_df = pre.unionByName(post).unionByName(ins)
+        if dl.is_delta_table(self.path(name)):
+            # the unpruned merge commits through overwrite(); Delta's
+            # history still names a merge into an existing table MERGE
+            self._pending_operation = "MERGE"
         try:
             self._merge_dispatch(
                 updates, name, keys, prune_partition_col, merge_schema
             )
         finally:
             self._pending_cdc_df = None
+            self._pending_operation = None
 
     def _merge_dispatch(
         self, updates, name, keys, prune_partition_col, merge_schema=False
@@ -909,7 +922,8 @@ class DeltaLogWarehouse(Warehouse):
         dl.commit_write(
             self.spark, self.path(name), staged,
             mode=dl_mode, partition_by=list(partition_by),
-            operation=operation, extra_removes=removes_fn, txn=txn,
+            operation=operation or self._pending_operation,
+            extra_removes=removes_fn, txn=txn,
             merge_schema=self._pending_merge_schema,
             # the Observation above evaluated every constraint in
             # constraints(name), which includes the log-declared set —
@@ -1149,12 +1163,14 @@ class DeltaLogWarehouse(Warehouse):
         raw = self._probe_scan(path, cand, state)
         matched = raw.filter(condition)
         cdf_on = self._cdf_enabled(name)
-        if cdf_on:
-            # ONE scan per DELETE (judge r9): the probe materializes the
-            # bounded matched set once; the change-file staging below
-            # reuses the cache instead of re-running the full table scan
-            matched = matched.persist()
-        try:
+        with materialized_scope():
+            if cdf_on:
+                # ONE scan per DELETE: the probe materializes the bounded
+                # matched set once; the change-file staging below reuses
+                # the cache instead of re-running the full table scan
+                matched = materialize(
+                    matched, StorageLevel.MEMORY_AND_DISK_DESER
+                )
             hits = matched.select("__dv_file", "__dv_pos")
             n = hits.count()
             if n == 0:
@@ -1220,9 +1236,6 @@ class DeltaLogWarehouse(Warehouse):
                 cdc_actions=cdc_actions,
             )
             return {"files_affected": len(by_file), "rows_deleted": n}
-        finally:
-            if cdf_on:
-                matched.unpersist()
 
     def optimize_small_files(
         self,

@@ -68,7 +68,9 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.storagelevel import StorageLevel
 
+from ..session import materialize, materialized_scope
 from . import avrofile, predicates
 from .confutil import conf_pinned as _conf_pinned
 
@@ -4719,15 +4721,13 @@ def rewrite_position_deletes(
     tomb, _ = t._position_delete_df(
         files, [dict(e["data_file"]) for e in pos_old]
     )
-    tomb = tomb.persist()
-    try:
+    with materialized_scope():
+        tomb = materialize(tomb, StorageLevel.MEMORY_AND_DISK_DESER)
         n = tomb.count()
         part_fields, fv = _table_write_shape(t)
         recs = _stage_position_deletes(
             spark, location, tomb, n, part_fields
         )
-    finally:
-        tomb.unpersist()
 
     md_dir = os.path.join(location, "metadata")
     seq = t.metadata.get("last-sequence-number", 0) + 1
@@ -5006,13 +5006,13 @@ def delete_where(
     if not files:
         return {"rows_deleted": 0, "files_affected": 0}
     deletes = t.delete_files(snapshot_id=head)
-    hits = (
-        _read_files_with_deletes(t, files, deletes, keep_meta=True)
-        .filter(condition)
-        .select("__ifile", "__ipos")
-        .persist()
-    )
-    try:
+    with materialized_scope():
+        hits = materialize(
+            _read_files_with_deletes(t, files, deletes, keep_meta=True)
+            .filter(condition)
+            .select("__ifile", "__ipos"),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        )
         n = hits.count()
         if n == 0:
             return {"rows_deleted": 0, "files_affected": 0}
@@ -5026,8 +5026,6 @@ def delete_where(
         recs = _stage_position_deletes(
             spark, location, hits, n, part_fields
         )
-    finally:
-        hits.unpersist()
     meta = _write_snapshot(
         location,
         spark.createDataFrame([], t.spark_schema()),
@@ -5090,13 +5088,13 @@ def overwrite_where(
     n = 0
     if files:
         deletes = t.delete_files(snapshot_id=head)
-        hits = (
-            _read_files_with_deletes(t, files, deletes, keep_meta=True)
-            .filter(match)
-            .select("__ifile", "__ipos")
-            .persist()
-        )
-        try:
+        with materialized_scope():
+            hits = materialize(
+                _read_files_with_deletes(t, files, deletes, keep_meta=True)
+                .filter(match)
+                .select("__ifile", "__ipos"),
+                StorageLevel.MEMORY_AND_DISK_DESER,
+            )
             n = hits.count()
             if n > max_rows:
                 raise ValueError(
@@ -5108,8 +5106,6 @@ def overwrite_where(
                 recs = _stage_position_deletes(
                     spark, location, hits, n, part_fields
                 )
-        finally:
-            hits.unpersist()
     meta = _write_snapshot(
         location, df, base=t.metadata, carry_prior=True,
         operation="overwrite",  # rows vanish: tails must not skip it

@@ -73,7 +73,9 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.storagelevel import StorageLevel
 
+from ..session import materialize, materialized_scope
 from .warehouse import Warehouse
 
 _MERGE_RE = re.compile(
@@ -370,12 +372,13 @@ class SqlDml:
     def sql(self, text: str) -> DataFrame:
         head = text.lstrip().split(None, 2)
         verb = head[0].upper() if head else ""
-        if verb == "MERGE":
-            return self._merge(text)
-        if verb == "UPDATE":
-            return self._update(text)
-        if verb == "DELETE":
-            return self._delete(text)
+        dml = {"MERGE": self._merge, "UPDATE": self._update,
+               "DELETE": self._delete}.get(verb)
+        if dml is not None:
+            # the frames a statement caches are freed when it returns OR
+            # raises (a CHECK violation aborts the write mid-statement)
+            with materialized_scope():
+                return dml(text)
         if verb == "DROP" and len(head) > 1 and head[1].upper() == "TABLE":
             return self._drop(text)
         if verb == "CREATE" and len(head) > 1 and head[1].upper() == "TABLE":
@@ -787,21 +790,20 @@ class SqlDml:
                     statement="UPDATE", table=name, rows_updated=0
                 )
             pstr = self._pstr(pcol)
-            new = updated_rows(
-                self.wh.read(name).filter(pstr.isin(touched))
-            ).persist()
+            new = materialize(
+                updated_rows(self.wh.read(name).filter(pstr.isin(touched))),
+                StorageLevel.MEMORY_AND_DISK_DESER,
+            )
             n = new.filter("__hit").count()
             self.wh._rewrite_partitions(name, pcol, new.drop("__hit"), touched)
-            new.unpersist()
             return self._summary(statement="UPDATE", table=name, rows_updated=n)
 
-        new = updated_rows(df).persist()
+        new = materialize(updated_rows(df), StorageLevel.MEMORY_AND_DISK_DESER)
         n = new.filter("__hit").count()
         self.wh.overwrite(
             new.drop("__hit"), name,
             partition_by=self.wh.partition_columns(name),
         )
-        new.unpersist()
         return self._summary(statement="UPDATE", table=name, rows_updated=n)
 
     @staticmethod
@@ -859,23 +861,24 @@ class SqlDml:
                     statement="DELETE", table=name, rows_deleted=0
                 )
             pstr = self._pstr(pcol)
-            pruned = df.filter(pstr.isin(touched)).persist()
+            pruned = materialize(
+                df.filter(pstr.isin(touched)),
+                StorageLevel.MEMORY_AND_DISK_DESER,
+            )
             n_before = pruned.count()
             kept = pruned.filter(~hit)
             n_kept = kept.count()
             self.wh._rewrite_partitions(name, pcol, kept, touched)
-            pruned.unpersist()
             return self._summary(
                 statement="DELETE", table=name, rows_deleted=n_before - n_kept
             )
 
-        kept = df.filter(~hit).persist()
+        kept = materialize(df.filter(~hit), StorageLevel.MEMORY_AND_DISK_DESER)
         n_kept = kept.count()
         n_before = df.count()
         self.wh.overwrite(
             kept, name, partition_by=self.wh.partition_columns(name)
         )
-        kept.unpersist()
         return self._summary(
             statement="DELETE", table=name, rows_deleted=n_before - n_kept
         )
@@ -1205,7 +1208,9 @@ class SqlDml:
         tcols = self.wh.read(name).columns
 
         on = [F.col(f"{talias}.{k}") == F.col(f"{salias}.{k}") for k in keys]
-        pairs = target.join(src, on, "inner").persist()
+        pairs = materialize(
+            target.join(src, on, "inner"), StorageLevel.MEMORY_AND_DISK_DESER
+        )
 
         def set_star():
             return [F.col(f"{salias}.{c}").alias(c) for c in tcols]
@@ -1359,7 +1364,6 @@ class SqlDml:
             out = out.unionByName(part)
         n_before = self.wh.read(name).count()
         self.wh.overwrite(out, name)
-        pairs.unpersist()
         n_after = self.wh.read(name).count()
         return self._summary(
             statement="MERGE",

@@ -34,20 +34,16 @@ _NON_QUERY_TOKENS = {
     "cms_estimate",          # sketch library fn referenced in prose
     "delta",                 # format name
     "orc",                   # format name
-    "wave",                  # codec name
-    "extract_audio_features",  # multimodal library fn (pytest-pinned)
-    "feature_rows",          # multimodal library fn
+    "feature_rows",          # geojson bronze row flattener
     "fetch_usgs_pages",      # geojson source fn
     "from_json",             # pyspark builtin
     "get_json_object",       # pyspark builtin
     "read_geojson",          # source fn
     "read_jsonl",            # source fn
     "recent_major_events",   # report-layer fn (pytest-pinned)
-    "resize_images",         # multimodal library fn
     "remove_orphan_files",   # iceberg maintenance fn (pytest-pinned)
     "rewrite_position_deletes",  # iceberg maintenance fn (oracle-gated
     #                              inside iceberg_delete_where_orders)
-    "sample_frames",         # multimodal library fn
     "split_valid",           # cleaning fn
     "symbols_after",         # bpe contract fn
     "prune_partition_col",   # maintenance fn

@@ -1,4 +1,4 @@
-"""Multimodal plumbing (metadata / resize / frame-sample) and text ops."""
+"""Multimodal plumbing (binary payload + metadata) and text ops."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,36 +23,6 @@ def test_extract_metadata_schema_and_values(spark, payload_df):
     assert rows[2].payload_bytes == 200 and rows[2].header_byte == ord("x")
     assert rows[3].payload_bytes == 0 and rows[3].header_byte == 0
     assert set(out.columns) == {"doc_id", "payload_bytes", "header_byte", "width", "height"}
-
-
-def test_resize_images_fake_codec(spark, payload_df):
-    out = multimodal.resize_images(payload_df, width=4, height=3, fake=True)
-    rows = {r.doc_id: r for r in out.collect()}
-    assert all(len(r.payload) == 12 for r in rows.values())
-    assert rows[1].payload == b"hello world "  # truncated to 12
-    assert rows[3].payload == b"\0" * 12       # empty padded
-    assert rows[1].out_width == 4 and rows[1].out_height == 3
-
-
-def test_resize_without_codec_raises(spark, payload_df):
-    with pytest.raises(Exception, match="fake=True"):
-        multimodal.resize_images(payload_df, fake=False).collect()
-
-
-def test_sample_frames_expansion(spark, payload_df):
-    out = multimodal.sample_frames(
-        payload_df, every_n_bytes=50, max_frames=3, fake=True
-    )
-    rows = out.collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    # doc 2: 200 bytes → 4 full frames capped at 3
-    assert len(by_doc[2]) == 3
-    assert all(len(r.frame) == 50 for r in by_doc[2])
-    assert sorted(r.frame_idx for r in by_doc[2]) == [0, 1, 2]
-    # doc 1: 30 bytes → 0 frames; doc 3 empty → 0 frames
-    assert 1 not in by_doc and 3 not in by_doc
 
 
 def test_text_quality_monotone_in_stopwords(spark):

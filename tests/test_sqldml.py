@@ -878,6 +878,40 @@ def test_constraint_enforced_on_pruned_partition_rewrite(spark, wh):
     assert {r.v for r in wh.read("pc").collect()} == {50, 6}
 
 
+def test_vetoed_dml_write_leaves_nothing_cached(spark, wh):
+    """An UPDATE or MERGE whose write a CHECK constraint vetoes still
+    frees what the statement cached: its scope closes on the raise, so
+    nothing stays in Spark's cache for the rest of the session."""
+    from global_seismic_data_pipeline_spark.sources.warehouse import (
+        ConstraintViolation,
+    )
+
+    def cache_empty() -> bool:
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    engine = SqlDml(wh)
+    wh.overwrite(
+        spark.createDataFrame([(1, 5.0), (2, 7.5)], "k int, mag double"), "c"
+    )
+    wh.add_constraint("c", "mag_range", "mag BETWEEN 0 AND 10")
+    spark.catalog.clearCache()
+
+    with pytest.raises(ConstraintViolation):
+        engine.sql("UPDATE c SET mag = 50 WHERE k = 1")
+    assert cache_empty()
+
+    # a conditional clause takes the general join + union MERGE path
+    spark.createDataFrame([(1, -3.0)], "k int, mag double") \
+        .createOrReplaceTempView("c_src")
+    with pytest.raises(ConstraintViolation):
+        engine.sql("""
+            MERGE INTO c t USING c_src s ON t.k = s.k
+            WHEN MATCHED AND s.mag < t.mag THEN UPDATE SET mag = s.mag
+        """)
+    assert cache_empty()
+    assert {r.mag for r in wh.read("c").collect()} == {5.0, 7.5}
+
+
 def test_ctas_and_insert_overwrite(spark, wh):
     """CREATE TABLE ... AS SELECT (with USING and PARTITIONED BY both
     honored) and INSERT OVERWRITE — on both backends, the delta one

@@ -30,9 +30,9 @@ def test_each_mutation_commits_one_version(spark, wh):
     wh.merge(_df(spark, [("a", 10)]), "t", ["k"])
     assert wh.versions("t") == [0, 1, 2]
     ops = [h["operation"] for h in wh.history("t")]  # newest first
-    # a MERGE into an unpartitioned table commits through the overwrite
-    # path; the partition-pruned rewrite records MERGE (test below)
-    assert ops == ["WRITE", "APPEND", "WRITE"]
+    assert ops == ["MERGE", "APPEND", "WRITE"]
+    wh.overwrite(_df(spark, [("c", 3)]), "t")  # the MERGE label is unset
+    assert wh.history("t")[0]["operation"] == "WRITE"
 
 
 def test_time_travel_reads_old_snapshot(spark, wh):
