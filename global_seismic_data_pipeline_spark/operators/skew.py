@@ -1,4 +1,4 @@
-"""Skew mitigation: salted two-phase aggregation and salted broadcast join.
+"""Skew mitigation: salted two-phase aggregation.
 
 AQE's skew-join splitting (enabled in session.py) handles most runtime skew
 at the join level, but a group-by whose hot key dwarfs every other still
@@ -9,10 +9,10 @@ classic fix: scatter each key across ``salt`` sub-keys, partially aggregate
 Only makes sense for algebraic aggregates (sum/count/min/max and anything
 composed from them — avg = sum/count).
 
-``replicated_broadcast_join`` handles the mirror case for joins that AQE
-cannot split (a broadcastable-but-not-tiny dim joined on a skewed fact
-key): replicate the dim ``salt`` times with a salt column and scatter the
-fact side, turning one hot partition into ``salt`` even ones.
+Joins need no rewrite here: AQE picks the join strategy from runtime
+statistics (a side that shrinks below the broadcast threshold is
+broadcast) and ``spark.sql.adaptive.skewJoin.enabled`` splits an
+oversized shuffle partition of a skewed join key into several tasks.
 """
 
 from __future__ import annotations
@@ -61,81 +61,3 @@ def salted_agg(
             for name, (kind, _) in aggs.items()
         ]
     )
-
-
-def replicated_broadcast_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: Sequence[str],
-    *,
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Join a fact with a small dim on skewed keys without one hot task.
-
-    The dim is replicated ``salt`` times (salt column cross join — still
-    broadcast-sized for real dims) and each fact row picks one replica, so
-    rows of the hot key spread over ``salt`` partitions. Result equals
-    ``fact.join(broadcast(dim), on, how)`` row-for-row for fact-preserving
-    joins only — ``inner``/``left``/``left_semi``/``left_anti``. Dim-
-    preserving sides (right/full outer) would emit ``salt`` null-extended
-    copies of every unmatched dim row, so they are rejected.
-    """
-    if how not in {"inner", "left", "left_outer", "leftouter", "left_semi",
-                   "leftsemi", "left_anti", "leftanti"}:
-        raise ValueError(
-            f"how={how!r}: only fact-preserving joins are equivalent under "
-            "dim replication (unmatched dim rows would appear salt times)"
-        )
-    salts = fact.sparkSession.range(salt).select(F.col("id").cast("int").alias("__salt"))
-    dim_rep = dim.crossJoin(salts)
-    salted_fact = fact.withColumn(
-        "__salt", F.pmod(F.monotonically_increasing_id(), F.lit(salt)).cast("int")
-    )
-    return salted_fact.join(
-        F.broadcast(dim_rep), on=[*on, "__salt"], how=how
-    ).drop("__salt")
-
-
-def salted_shuffle_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: Sequence[str],
-    *,
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-mitigating SHUFFLE join — the shuffle-class sibling of
-    :func:`replicated_broadcast_join` for when neither side fits the
-    broadcast budget (the ``joinplan`` shuffle-with-hot-key decision).
-
-    The skewed side gets a uniform salt in ``[0, salt)``; the other side
-    is replicated ``salt`` times (tiny range cross join, ``salt`` rows —
-    NOT a broadcast of ``other`` itself); both then hash-shuffle on
-    ``(keys, salt)``, so the hot key's rows spread over ``salt`` reduce
-    tasks instead of pinning one. Cost: ``other`` shuffles ``salt``× its
-    size — worth it exactly when one reducer would otherwise run ``salt``×
-    longer than the rest, which is what the planner's rows-per-key skew
-    advisory detects.
-
-    Row-equivalent to ``skewed.join(other, on, how)`` for joins that
-    preserve only the SKEWED side's unmatched rows (``inner`` / ``left`` /
-    ``left_semi`` / ``left_anti`` with ``skewed`` on the left): an
-    unmatched ``other`` row exists ``salt`` times, so right/full outer
-    would emit it ``salt`` times and are rejected."""
-    if how not in {"inner", "left", "left_outer", "leftouter", "left_semi",
-                   "leftsemi", "left_anti", "leftanti"}:
-        raise ValueError(
-            f"how={how!r}: only skewed-side-preserving joins are "
-            "equivalent under replication (unmatched replica rows would "
-            "appear salt times)"
-        )
-    salts = skewed.sparkSession.range(salt).select(
-        F.col("id").cast("int").alias("__salt")
-    )
-    other_rep = other.crossJoin(F.broadcast(salts))
-    salted = skewed.withColumn(
-        "__salt",
-        F.pmod(F.monotonically_increasing_id(), F.lit(salt)).cast("int"),
-    )
-    return salted.join(other_rep, on=[*on, "__salt"], how=how).drop("__salt")

@@ -95,12 +95,6 @@ def refresh_file_stats(
     that appeared since the last refresh (append-only files never change,
     so their stats rows are reusable verbatim); drop rows of files that
     vanished (compaction/vacuum). Returns the number of files scanned."""
-    if warehouse.fmt != "parquet":
-        # silent zero-file indexing on a non-parquet warehouse would make
-        # every downstream "pruned" read skip EVERYTHING — fail loudly
-        raise ValueError(
-            f"data-skipping stats support parquet warehouses only, got {warehouse.fmt!r}"
-        )
     spark = warehouse.spark
     stats_name = f"{name}{STATS_SUFFIX}"
     # normalize to the file:// URI scheme input_file_name() reports
@@ -304,10 +298,6 @@ def refresh_file_blooms(
     exactly). Returns files scanned."""
     from . import bloom as _bloom
 
-    if warehouse.fmt != "parquet":
-        raise ValueError(
-            f"bloom sidecar supports parquet warehouses only, got {warehouse.fmt!r}"
-        )
     _bloom._validate(m_log2, k)
     spark = warehouse.spark
     side_name = _bloom_table(name, col)

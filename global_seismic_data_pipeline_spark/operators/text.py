@@ -105,24 +105,6 @@ def with_language_guess(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("lang_guess", guess)
 
 
-def shingles_from_words(words: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles from a pre-split word array.
-
-    ``words`` should be a materialized attribute, not a nested expression:
-    lambda-captured subtrees re-evaluate per element, so passing the raw
-    split expression here would re-run the regex split once per shingle."""
-    k = F.size(words) - (n - 1)
-    shingles = F.transform(
-        F.sequence(F.lit(1), k),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-    )
-    # sequence(1, k) with k < 1 would generate a DESCENDING range — guard
-    # short documents to an empty shingle set instead.
-    return F.when(k >= 1, F.array_distinct(shingles)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def token_rows(
     df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
     cluster_by_id: bool = False,
@@ -359,17 +341,6 @@ def corpus_top_ngrams(
         .orderBy(F.col("n").desc(), F.col("ngram").asc())
         .limit(k)
     )
-
-
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Array of distinct word n-gram shingles of the normalized text.
-
-    Convenience single-expression form for small inputs ONLY. Hot paths
-    (near-dup, anything that explodes or filters on the result) must use
-    ``neardup.shingle_rows`` — Generate/Filter over an HOF-built array
-    re-evaluates the lambda chain per element (see neardup module
-    docstring)."""
-    return shingles_from_words(F.split(normalized(text), " "), n)
 
 
 def _ngram_rows(

@@ -149,25 +149,6 @@ def analyze(wh: Warehouse, name: str) -> None:
         wh.spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
 
 
-def refresh_join_stats(
-    wh: Warehouse, pairs: Sequence[tuple[str, str]]
-) -> int:
-    """ANALYZE-step companion for the engine's own join planner: refresh
-    the stored (table, key) rows that :func:`operators.joinplan.plan_join`
-    consumes, so planning stays a control-plane read (never a data scan).
-    Run alongside :func:`analyze` in the maintenance window. Skips pairs
-    whose table does not exist; returns the number of rows refreshed."""
-    from ..operators import joinplan
-
-    n = 0
-    for table, key in pairs:
-        if not wh.exists(table):
-            continue
-        joinplan.analyze_table(wh, wh.read(table), table, key)
-        n += 1
-    return n
-
-
 def vacuum(wh: Warehouse) -> int:
     """Remove leftover staging/trash directories from interrupted writes
     (ref VACUUM, TABLE OPTIMIZATION.py:136-144). Returns dirs removed."""

@@ -86,14 +86,6 @@ def _value_bands_df(spark: SparkSession) -> DataFrame:
     )
 
 
-def _zone_boxes_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        ZONE_BOXES,
-        "zone_code string, zone_name string, min_x double, max_x double,"
-        " min_y double, max_y double, priority int",
-    )
-
-
 # --------------------------------------------------------------------------
 # Flagship: medallion-style regional risk rollup (A1+A2+A11+F1+F5+W5).
 def flagship_regional_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,7 +34,7 @@ import shutil
 from collections.abc import Sequence
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 from ..session import materialize, materialized_scope
@@ -84,11 +84,6 @@ class _JoinedObservation:
 
 class DeltaLogWarehouse(Warehouse):
     """Named Delta tables under one root, with the Warehouse API."""
-
-    def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
-        if fmt != "parquet":
-            raise ValueError("Delta tables are parquet by specification")
-        super().__init__(spark, root, "parquet")
 
     # -- existence is a LOG property, not a directory-listing one ----------
     def exists(self, name: str) -> bool:
@@ -680,7 +675,8 @@ class DeltaLogWarehouse(Warehouse):
     # _change_type) through _commit_df, which stages them under
     # _change_data/ and publishes the cdc actions IN THE SAME commit
     _pending_cdc_df: DataFrame | None = None
-    # a MERGE into an existing table threads its history operation the
+    # a MERGE into an existing table, and SQL UPDATE / DELETE /
+    # conditional MERGE (sqldml), thread their history operation the
     # same way (an explicit ``operation`` argument still wins)
     _pending_operation: str | None = None
 
@@ -938,10 +934,11 @@ class DeltaLogWarehouse(Warehouse):
         self, name: str, pcol: str, merged: DataFrame, touched: Sequence
     ) -> None:
         # one commit: remove every active file in a touched partition, add
-        # the staged replacements — Delta MERGE's file-level pruned rewrite
+        # the staged replacements — Delta MERGE's file-level pruned rewrite.
+        # The caller names the commit through _pending_operation (merge()
+        # sets MERGE; SQL UPDATE/DELETE set their own)
         self._commit_df(
-            merged, name, "append", [pcol],
-            remove_partition=(pcol, touched), operation="MERGE",
+            merged, name, "append", [pcol], remove_partition=(pcol, touched),
         )
 
     # -- metadata from the log ---------------------------------------------
@@ -1559,7 +1556,7 @@ class DeltaLogWarehouse(Warehouse):
     def save_bucketed(self, *a, **k):  # pragma: no cover - contract guard
         raise NotImplementedError(
             "bucketed tables need the session catalog (saveAsTable); use the "
-            "parquet/ORC warehouse for bucketed index stores"
+            "plain parquet warehouse for bucketed index stores"
         )
 
     append_bucketed = save_bucketed

@@ -38,7 +38,7 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from . import iceberg as ib
 from .warehouse import Warehouse
@@ -48,11 +48,6 @@ class IcebergWarehouse(Warehouse):
     """Named Iceberg tables under one root, with the Warehouse API."""
 
     _evolves_partial_rewrites = True
-
-    def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
-        if fmt != "parquet":
-            raise ValueError("Iceberg data files are parquet here")
-        super().__init__(spark, root, "parquet")
 
     # -- existence is a METADATA property ----------------------------------
     def _is_table(self, name: str) -> bool:

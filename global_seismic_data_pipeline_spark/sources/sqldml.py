@@ -55,8 +55,8 @@ Supported grammar (case-insensitive keywords):
   verbatim: ``OPTIMIZE <tbl> [ZORDER BY (cols)]`` (→ compaction with
   range clustering, :33-36/:100), ``DESCRIBE DETAIL <tbl>`` (Delta
   column names — ``numFiles`` etc., :23-26), ``ANALYZE TABLE <tbl>
-  COMPUTE STATISTICS`` (:119-124, also refreshing the engine's stored
-  join-planning stats), ``VACUUM <tbl> [RETAIN n HOURS]`` (:136-144).
+  COMPUTE STATISTICS`` (:119-124, Spark's catalog statistics),
+  ``VACUUM <tbl> [RETAIN n HOURS]`` (:136-144).
   On the Delta-log backend additionally ``DESCRIBE HISTORY <tbl>``,
   ``RESTORE TABLE <tbl> TO VERSION AS OF n``, ``SELECT … FROM <tbl>
   VERSION AS OF n`` and ``SELECT … FROM table_changes('<tbl>', a[, b])``
@@ -71,6 +71,7 @@ Execution is the same shuffle shape Delta uses for unpartitioned tables
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
@@ -612,9 +613,9 @@ class SqlDml:
 
     def _analyze(self, text: str) -> DataFrame:
         """``ANALYZE TABLE t COMPUTE STATISTICS`` (TABLE
-        OPTIMIZATION.py:119-124): catalog stats when cataloged, plus a
-        refresh of the engine's own join-planning stats rows for the
-        table's likely join keys (first clustering key when declared)."""
+        OPTIMIZATION.py:119-124): Spark's own catalog statistics when the
+        table is cataloged, a no-op on the temp-view warehouse (AQE
+        supplies runtime statistics there)."""
         m = _mask_match(_ANALYZE_RE, text)
         if not m:
             raise ValueError(f"unsupported ANALYZE syntax: {text!r}")
@@ -624,15 +625,7 @@ class SqlDml:
         from ..pipeline import maintenance
 
         maintenance.analyze(self.wh, name)
-        keys = maintenance.DEFAULT_CLUSTERING.get(name, ())
-        refreshed = (
-            maintenance.refresh_join_stats(self.wh, [(name, keys[0])])
-            if keys
-            else 0
-        )
-        return self._summary(
-            statement="ANALYZE", table=name, join_stats_refreshed=refreshed
-        )
+        return self._summary(statement="ANALYZE", table=name)
 
     def _describe(self, text: str) -> DataFrame:
         """``DESCRIBE DETAIL t`` (Delta column names — the reference
@@ -671,7 +664,7 @@ class SqlDml:
         return tiny_df(
             self.spark,
             [(
-                self.wh.fmt, self.wh.path(name), stats["num_files"],
+                "parquet", self.wh.path(name), stats["num_files"],
                 stats["size_bytes"],
                 ",".join(self.wh.partition_columns(name)) or None,
                 version,
@@ -743,6 +736,21 @@ class SqlDml:
             list(kv.keys()),
         )
 
+    @contextmanager
+    def _history_label(self, operation: str):
+        """Name the commits made inside the block in the table history.
+        Delta records UPDATE, DELETE and MERGE for these statements, not
+        the WRITE of the rewrite that carries them out; only the
+        commit-log backend keeps a history."""
+        if not hasattr(self.wh, "_pending_operation"):
+            yield
+            return
+        self.wh._pending_operation = operation
+        try:
+            yield
+        finally:
+            self.wh._pending_operation = None
+
     # -- UPDATE / DELETE --------------------------------------------------
     def _update(self, text: str) -> DataFrame:
         m = _mask_match(_UPDATE_RE, text)
@@ -795,15 +803,19 @@ class SqlDml:
                 StorageLevel.MEMORY_AND_DISK_DESER,
             )
             n = new.filter("__hit").count()
-            self.wh._rewrite_partitions(name, pcol, new.drop("__hit"), touched)
+            with self._history_label("UPDATE"):
+                self.wh._rewrite_partitions(
+                    name, pcol, new.drop("__hit"), touched
+                )
             return self._summary(statement="UPDATE", table=name, rows_updated=n)
 
         new = materialize(updated_rows(df), StorageLevel.MEMORY_AND_DISK_DESER)
         n = new.filter("__hit").count()
-        self.wh.overwrite(
-            new.drop("__hit"), name,
-            partition_by=self.wh.partition_columns(name),
-        )
+        with self._history_label("UPDATE"):
+            self.wh.overwrite(
+                new.drop("__hit"), name,
+                partition_by=self.wh.partition_columns(name),
+            )
         return self._summary(statement="UPDATE", table=name, rows_updated=n)
 
     @staticmethod
@@ -868,7 +880,8 @@ class SqlDml:
             n_before = pruned.count()
             kept = pruned.filter(~hit)
             n_kept = kept.count()
-            self.wh._rewrite_partitions(name, pcol, kept, touched)
+            with self._history_label("DELETE"):
+                self.wh._rewrite_partitions(name, pcol, kept, touched)
             return self._summary(
                 statement="DELETE", table=name, rows_deleted=n_before - n_kept
             )
@@ -876,9 +889,10 @@ class SqlDml:
         kept = materialize(df.filter(~hit), StorageLevel.MEMORY_AND_DISK_DESER)
         n_kept = kept.count()
         n_before = df.count()
-        self.wh.overwrite(
-            kept, name, partition_by=self.wh.partition_columns(name)
-        )
+        with self._history_label("DELETE"):
+            self.wh.overwrite(
+                kept, name, partition_by=self.wh.partition_columns(name)
+            )
         return self._summary(
             statement="DELETE", table=name, rows_deleted=n_before - n_kept
         )
@@ -1363,7 +1377,8 @@ class SqlDml:
         for part in updated_parts + inserted_parts:
             out = out.unionByName(part)
         n_before = self.wh.read(name).count()
-        self.wh.overwrite(out, name)
+        with self._history_label("MERGE"):
+            self.wh.overwrite(out, name)
         n_after = self.wh.read(name).count()
         return self._summary(
             statement="MERGE",

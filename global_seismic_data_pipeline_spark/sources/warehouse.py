@@ -28,15 +28,14 @@ schema it last inferred together with a fingerprint of what inference
 depends on: the sorted ``(relative path, size, mtime_ns)`` of every file
 under the table directory (summary files included — parquet inference
 reads ``_metadata``/``_common_metadata`` when present) and the session
-confs that change what inference returns (``_SCHEMA_CONFS``); the format
-is fixed per instance. On a match the read passes the remembered schema to
-``spark.read.schema(...)``; Spark still lists the files fresh, so a read
-never sees a stale file list, and the file set is taken again after the
-load so that a write landing mid-read falls back to inference. The memo
-cannot go stale without hooks in the write paths: every writer — this
-instance, another ``Warehouse`` on the same root, or raw Spark — adds,
-removes or replaces files, which changes the fingerprint and forces a
-fresh inference. The same files under the same confs give the same
+confs that change what inference returns (``_SCHEMA_CONFS``). On a
+match the read passes the remembered schema to ``spark.read.schema(...)``;
+Spark still lists the files fresh, so a read never sees a stale file list,
+and the file set is taken again after the load so that a write landing
+mid-read falls back to inference. The memo cannot go stale without hooks
+in the write paths: every writer — this instance, another ``Warehouse`` on
+the same root, or raw Spark — adds, removes or replaces files, which
+changes the fingerprint and forces a fresh inference. The same files under the same confs give the same
 inferred schema, so a hit only skips work whose result is already known.
 The Delta and Iceberg backends override ``read`` and take the schema from
 their logs, so they never infer and need no memo.
@@ -59,7 +58,6 @@ from pyspark.sql.types import StructType
 _SCHEMA_CONFS = (
     "spark.sql.parquet.mergeSchema",
     "spark.sql.parquet.respectSummaryFiles",
-    "spark.sql.orc.mergeSchema",
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -86,23 +84,11 @@ def _file_set(path: str) -> tuple:
 
 
 class Warehouse:
-    """A directory of named columnar tables with atomic replacement.
+    """A directory of named parquet tables with atomic replacement."""
 
-    ``fmt`` selects the storage format: ``parquet`` (default) or ``orc`` —
-    both splittable columnar formats with predicate-pushdown/column-pruning
-    DataSource implementations built into Spark, so every warehouse
-    semantic (append, atomic overwrite, partition-pruned MERGE, bucketed
-    tables, views, stats) is format-independent. The DuckDB oracle reads
-    parquet only, so driver queries stay on the default; the ORC path is
-    pinned by the warehouse test suite running under both formats."""
-
-    def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
-        if fmt not in ("parquet", "orc"):
-            raise ValueError(f"unsupported format {fmt!r}; use 'parquet' or 'orc'")
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.fmt = fmt
-        self._ext = f".{fmt}"
         # set by merge() while a schema-evolving rewrite is in flight;
         # the lakehouse backends' commit paths consult it
         self._pending_merge_schema = False
@@ -119,7 +105,7 @@ class Warehouse:
         if not os.path.isdir(p):
             return False
         for _root, _dirs, files in os.walk(p):
-            if any(f.endswith(self._ext) for f in files):
+            if any(f.endswith(".parquet") for f in files):
                 return True
         return False
 
@@ -205,12 +191,12 @@ class Warehouse:
         key = (files, tuple(self.spark.conf.get(k) for k in _SCHEMA_CONFS))
         memo = self._schemas.get(name)
         if memo is not None and memo[0] == key:
-            df = self.spark.read.schema(memo[1]).format(self.fmt).load(path)
+            df = self.spark.read.schema(memo[1]).parquet(path)
             # Spark listed the files inside load(); unchanged on both
             # sides of it means it listed exactly the fingerprinted set
             if _file_set(path) == files:
                 return df
-        df = self.spark.read.format(self.fmt).load(path)
+        df = self.spark.read.parquet(path)
         self._schemas[name] = (key, df.schema)
         return df
 
@@ -239,14 +225,14 @@ class Warehouse:
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.format(self.fmt).save(staging)
+        w.parquet(staging)
         self._abort_staging_if_violated(obs, cons, staging)
         final = self.path(name)
         os.makedirs(final, exist_ok=True)
         for root_, _dirs, files in os.walk(staging):
             rel = os.path.relpath(root_, staging)
             for f in files:
-                if not f.endswith(self._ext):
+                if not f.endswith(".parquet"):
                     continue  # _SUCCESS markers stay behind
                 dst_dir = final if rel == "." else os.path.join(final, rel)
                 os.makedirs(dst_dir, exist_ok=True)
@@ -274,7 +260,7 @@ class Warehouse:
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.format(self.fmt).save(staging)
+        w.parquet(staging)
         self._abort_staging_if_violated(obs, cons, staging)
         if os.path.isdir(final):
             os.rename(final, trash)
@@ -305,15 +291,13 @@ class Warehouse:
         staging = os.path.join(
             self.root, f".staging-{name}-{uuid.uuid4().hex}"
         )
-        df.write.mode("overwrite").partitionBy(*pcols).format(
-            self.fmt
-        ).save(staging)
+        df.write.mode("overwrite").partitionBy(*pcols).parquet(staging)
         self._abort_staging_if_violated(obs, cons, staging)
         final = self.path(name)
         leaves = [
             root_
             for root_, _dirs, files in os.walk(staging)
-            if any(f.endswith(self._ext) for f in files)
+            if any(f.endswith(".parquet") for f in files)
         ]
         # rename-to-trash, never rmtree-then-rename: a crash mid-swap
         # must leave every partition's data in EITHER the table or the
@@ -348,7 +332,7 @@ class Warehouse:
         counts: dict[str, int] = {}
         base = self.path(name)
         for root_, _dirs, files in os.walk(base):
-            n = sum(1 for f in files if f.endswith(self._ext))
+            n = sum(1 for f in files if f.endswith(".parquet"))
             if not n:
                 continue
             rel = os.path.relpath(root_, base)
@@ -486,7 +470,7 @@ class Warehouse:
         MERGE / UPDATE / DELETE."""
         staging = os.path.join(self.root, f".staging-{name}-{uuid.uuid4().hex}")
         merged, obs, cons = self._observe_constraints(merged, name)
-        merged.write.mode("overwrite").partitionBy(pcol).format(self.fmt).save(staging)
+        merged.write.mode("overwrite").partitionBy(pcol).parquet(staging)
         self._abort_staging_if_violated(obs, cons, staging)
         final = self.path(name)
         swapped = set()
@@ -713,7 +697,7 @@ class Warehouse:
         writer = (
             df.repartition(num_buckets, *[F.col(c) for c in bucket_cols])
             .write.mode("overwrite")
-            .format(self.fmt)
+            .format("parquet")
             .option("path", self.path(name))
             .bucketBy(num_buckets, *bucket_cols)
         )
@@ -742,7 +726,7 @@ class Warehouse:
         writer = (
             df.repartition(num_buckets, *[F.col(c) for c in bucket_cols])
             .write.mode("append")
-            .format(self.fmt)
+            .format("parquet")
             .option("path", self.path(name))
             .bucketBy(num_buckets, *bucket_cols)
         )
@@ -771,7 +755,7 @@ class Warehouse:
         (recursive — partitioned tables keep files under key=value dirs)."""
         files = []
         for root_, _dirs, fnames in os.walk(self.path(name)):
-            files += [os.path.join(root_, f) for f in fnames if f.endswith(self._ext)]
+            files += [os.path.join(root_, f) for f in fnames if f.endswith(".parquet")]
         return {
             "num_files": len(files),
             "size_bytes": sum(os.path.getsize(f) for f in files),

@@ -357,7 +357,7 @@ def dynamic_overwrite_sink(
     def replace_batch(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        bwh = type(wh)(batch_df.sparkSession, wh.root, wh.fmt)
+        bwh = type(wh)(batch_df.sparkSession, wh.root)
         if not state["ready"]:
             if not bwh.exists(table):
                 if not partition_by:
@@ -481,7 +481,7 @@ def make_dedup_batch_fn(
             # would probe the store as it looked before batch 1). Bind a
             # per-batch warehouse to the batch's own session: every probe
             # resolves fresh.
-            bwh = Warehouse(batch_df.sparkSession, wh.root, wh.fmt)
+            bwh = Warehouse(batch_df.sparkSession, wh.root)
             epochs = f"{name}_epochs"
             if bwh.exists(epochs) and (
                 bwh.read(epochs)
@@ -585,7 +585,7 @@ def make_ann_batch_fn(wh: Warehouse, *, name: str = "ivf_index"):
             return
         # per-batch warehouse bound to the micro-batch's cloned session
         # (same stale-relation-cache hazard as the dedup sink)
-        bwh = Warehouse(batch_df.sparkSession, wh.root, wh.fmt)
+        bwh = Warehouse(batch_df.sparkSession, wh.root)
         epochs = f"{name}_epochs"
         if bwh.exists(epochs) and (
             bwh.read(epochs)

@@ -33,7 +33,6 @@ _COVERAGE = os.path.join(_REPO, "COVERAGE.md")
 _NON_QUERY_TOKENS = {
     "cms_estimate",          # sketch library fn referenced in prose
     "delta",                 # format name
-    "orc",                   # format name
     "feature_rows",          # geojson bronze row flattener
     "fetch_usgs_pages",      # geojson source fn
     "from_json",             # pyspark builtin

@@ -518,9 +518,7 @@ def test_deltawh_check_constraints_at_commit_boundary(spark, dwh):
     assert not [d for d in os.listdir(root) if d.startswith(".delta-staging")]
 
 
-def test_deltawh_rejects_nonparquet_and_bucketed(spark, tmp_path):
-    with pytest.raises(ValueError, match="parquet by specification"):
-        DeltaLogWarehouse(spark, str(tmp_path / "x"), fmt="orc")
+def test_deltawh_rejects_bucketed(spark, tmp_path):
     dwh = DeltaLogWarehouse(spark, str(tmp_path / "y"))
     with pytest.raises(NotImplementedError):
         dwh.save_bucketed(None, "t", ["k"])

@@ -1,4 +1,4 @@
-"""Salted aggregation/join equivalence + windowed ingestion loop resume."""
+"""Salted aggregation equivalence + windowed ingestion loop resume."""
 
 from datetime import datetime, timezone
 
@@ -48,22 +48,6 @@ def test_salted_agg_equals_direct(spark):
     assert salted == direct
 
 
-def test_replicated_broadcast_join_equals_direct(spark):
-    fact = _skewed_df(spark)
-    dim = spark.createDataFrame(
-        [("HOT", 1), ("k1", 2), ("k2", 3)], "k string, dim_val int"
-    )
-    direct = sorted(
-        (r.k, r.v, r.dim_val)
-        for r in fact.join(F.broadcast(dim), "k").collect()
-    )
-    via_salt = sorted(
-        (r.k, r.v, r.dim_val)
-        for r in skew.replicated_broadcast_join(fact, dim, ["k"], salt=4).collect()
-    )
-    assert via_salt == direct
-
-
 def _feature(fid, t):
     ms = int(t.replace(tzinfo=timezone.utc).timestamp() * 1000)
     return {"id": fid, "properties": {"time": ms, "mag": 5.0},
@@ -107,104 +91,3 @@ def test_ingestion_loop_windows_and_resume(spark, tmp_path):
         clock=lambda: datetime(2025, 6, 2, tzinfo=timezone.utc),
     )
     assert calls[0][0] == datetime(2025, 5, 9, 1)
-
-
-def test_salted_shuffle_join_equals_direct_and_spreads_hot_key(spark):
-    """Shuffle-class skew execution: the salted join returns exactly the
-    plain join's rows while the hot key's output rows land on MULTIPLE
-    reduce partitions (the mechanism that removes the one-hot-task
-    bottleneck — asserted structurally, not by timing, per the shared-host
-    variance rule)."""
-    fact = _skewed_df(spark)          # 90% of rows share k='HOT'
-    other = spark.range(200).select(
-        F.concat(
-            F.when(F.col("id") % 4 == 0, F.lit("HOT")).otherwise(
-                F.concat(F.lit("k"), (F.col("id") % 50).cast("string"))
-            )
-        ).alias("k"),
-        F.col("id").alias("o_id"),
-    ).distinct()
-
-    # force the shuffle regime the operator exists for (tiny test frames
-    # would otherwise auto-broadcast and dodge the hot-reducer problem)
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    coal = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # AQE would re-merge the tiny test partitions post-shuffle, hiding
-    # the spread this test asserts (at real scale nothing re-merges a
-    # hot key's worth of data)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        plain = fact.join(other, ["k"], "inner")
-        salted = skew.salted_shuffle_join(fact, other, ["k"], salt=8)
-        assert sorted(map(tuple, salted.collect())) == sorted(
-            map(tuple, plain.collect())
-        )
-
-        # structural skew proof: hot-key rows occupy >1 partition after
-        # the salted shuffle, exactly 1 after the plain hash shuffle
-        def hot_parts(df):
-            return (
-                df.filter(F.col("k") == "HOT")
-                .select(F.spark_partition_id().alias("p"))
-                .distinct()
-                .count()
-            )
-
-        assert hot_parts(plain) == 1
-        assert hot_parts(salted) > 1
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", coal
-        )
-
-    # only skewed-side-preserving joins are legal
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="skewed-side-preserving"):
-        skew.salted_shuffle_join(fact, other, ["k"], how="full_outer")
-
-
-def test_apply_strategy_executes_salted_skew_join(spark):
-    """Planner wiring: a shuffle decision with a hot-key advisory and
-    salt=N executes the salted plan (left- and right-skewed orientations)
-    and returns the plain join's exact rows in the plain join's column
-    order; without salt the plain shuffle runs."""
-    from global_seismic_data_pipeline_spark.operators import joinplan
-
-    fact = _skewed_df(spark).withColumn("fv", F.col("v") * 2)
-    other = spark.range(60).select(
-        F.when(F.col("id") == 0, F.lit("HOT"))
-        .otherwise(F.concat(F.lit("k"), (F.col("id") % 50).cast("string")))
-        .alias("k"),
-        F.col("id").alias("o_id"),
-    ).distinct()
-
-    fs = joinplan.join_stats(fact, "k")
-    os_ = joinplan.join_stats(other, "k")
-    # force the shuffle regime (no broadcast budget) — skew must flag left
-    d = joinplan.choose_join_strategy(fs, os_, broadcast_bytes=0)
-    assert d.strategy == "shuffle" and d.skew_warning and d.skew_side == "left"
-
-    plain = fact.join(other, ["k"], "inner")
-    expect = sorted(map(tuple, plain.collect()))
-
-    salted = joinplan.apply_strategy(fact, other, ["k"], d, salt=8)
-    assert salted.columns == plain.columns
-    assert sorted(map(tuple, salted.collect())) == expect
-    assert "__salt" not in salted.columns
-
-    # right-skewed orientation (swap sides): inner still equivalent,
-    # column order restored to left.join(right)
-    d_swapped = joinplan.choose_join_strategy(os_, fs, broadcast_bytes=0)
-    assert d_swapped.skew_side == "right"
-    salted_r = joinplan.apply_strategy(other, fact, ["k"], d_swapped, salt=8)
-    plain_r = other.join(fact, ["k"], "inner")
-    assert salted_r.columns == plain_r.columns
-    assert sorted(map(tuple, salted_r.collect())) == sorted(
-        map(tuple, plain_r.collect())
-    )
-
-    # no salt → plain join (no salt machinery in the plan)
-    unsalted = joinplan.apply_strategy(fact, other, ["k"], d)
-    assert "pmod" not in unsalted._jdf.queryExecution().analyzed().toString()

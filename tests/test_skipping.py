@@ -259,15 +259,6 @@ def test_stats_invalidated_by_overwrite_and_merge(spark, wh):
     assert (row.n_rows, row.max_k) == (401, 5000)
 
 
-def test_refresh_rejects_non_parquet_warehouse(spark, tmp_path):
-    """An ORC warehouse must fail loudly — silent zero-file stats would
-    make every pruned read skip everything."""
-    orc_wh = Warehouse(spark, str(tmp_path / "orcwh"), fmt="orc")
-    orc_wh.overwrite(spark.range(10).selectExpr("id as k"), "t")
-    with pytest.raises(ValueError, match="parquet"):
-        skipping.refresh_file_stats(orc_wh, "t", ["k"])
-
-
 # -- Bloom file-skipping sidecar -------------------------------------------
 
 

@@ -4,6 +4,7 @@ run unchanged against the parquet warehouse (ref:
 
 from __future__ import annotations
 
+import os
 from datetime import datetime
 
 import pytest
@@ -553,6 +554,25 @@ def test_reference_table_optimization_flow_verbatim(spark, wh):
         engine.sql("OPTIMIZE ghost")
 
 
+def test_analyze_leaves_warehouse_tables_unchanged(spark, tmp_path):
+    """ANALYZE is Spark's own catalog statistics (a no-op on temp views):
+    it writes no table of its own into the user's warehouse."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.overwrite(
+        spark.range(20).selectExpr(
+            "concat('ev', id) AS event_id",
+            "timestamp'2025-05-01 00:00:00' + make_interval(0,0,0,0,0,0,id) AS time",
+        ),
+        "bronze_earthquakes",
+    )
+    before = sorted(os.listdir(wh.root))
+    row = SqlDml(wh).sql(
+        "ANALYZE TABLE bronze_earthquakes COMPUTE STATISTICS"
+    ).collect()[0]
+    assert sorted(os.listdir(wh.root)) == before
+    assert row.asDict() == {"statement": "ANALYZE", "table": "bronze_earthquakes"}
+
+
 def test_versioned_sql_surface(spark, tmp_path):
     """DESCRIBE HISTORY / RESTORE / VERSION AS OF / table_changes() on
     the Delta backend; each refuses cleanly on the plain backend."""
@@ -696,6 +716,9 @@ def test_partitioned_dml_commits_on_versioned_backend(spark, tmp_path):
     engine.sql("UPDATE p SET v = 99 WHERE day = 'd1'")            # v1
     engine.sql("DELETE FROM p WHERE day = 'd2'")                  # v2
     assert vwh.versions("p") == [0, 1, 2]
+    assert [h["operation"] for h in vwh.history("p")] == [
+        "DELETE", "UPDATE", "WRITE",
+    ]
     ch = vwh.table_changes("p", 1, 2, keys=["k"])
     got = sorted((r._commit_version, r._change_type, r.k) for r in ch.collect())
     assert got == [
@@ -704,6 +727,32 @@ def test_partitioned_dml_commits_on_versioned_backend(spark, tmp_path):
     ]
     # time travel still sees the pre-update value
     assert vwh.read_version("p", 0).filter("k = 1").collect()[0].v == 10
+
+
+def test_unpartitioned_dml_history_names_each_statement(spark, tmp_path):
+    """UPDATE, DELETE and a conditional MERGE rewrite an unpartitioned
+    Delta table through a full overwrite; the history still names each
+    statement, as Delta does, and a plain overwrite stays WRITE."""
+    vwh = DeltaLogWarehouse(spark, str(tmp_path / "vwh"))
+    engine = SqlDml(vwh)
+    vwh.overwrite(
+        spark.createDataFrame([(1, 10), (2, 20), (3, 30)], "k int, v int"), "u"
+    )                                                             # v0
+    engine.sql("UPDATE u SET v = v + 1 WHERE k = 1")              # v1
+    engine.sql("DELETE FROM u WHERE k = 2")                       # v2
+    spark.createDataFrame([(1, 5), (4, 40)], "k int, v int") \
+        .createOrReplaceTempView("u_src")
+    engine.sql("""
+        MERGE INTO u t USING u_src s ON t.k = s.k
+        WHEN MATCHED AND s.v > t.v THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *
+    """)                                                          # v3
+    assert [h["operation"] for h in vwh.history("u")] == [
+        "MERGE", "DELETE", "UPDATE", "WRITE",
+    ]
+    assert sorted(tuple(r) for r in vwh.read("u").collect()) == [
+        (1, 11), (3, 30), (4, 40),
+    ]
 
 
 def test_merge_auto_prunes_partitioned_target(spark, wh):

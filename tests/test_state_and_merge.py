@@ -10,22 +10,14 @@ import pytest
 from global_seismic_data_pipeline_spark.sources.warehouse import Warehouse
 
 
-import functools
-
 from global_seismic_data_pipeline_spark.sources.deltawh import DeltaLogWarehouse
 
-_ORC = functools.partial(Warehouse, fmt="orc")
 
-
-@pytest.fixture(
-    params=[Warehouse, _ORC, DeltaLogWarehouse],
-    ids=["plain", "orc", "delta"],
-)
+@pytest.fixture(params=[Warehouse, DeltaLogWarehouse], ids=["plain", "delta"])
 def wh_cls(request):
-    """Every warehouse-semantics test runs under ALL backends — the
-    REAL-``_delta_log`` backend (sources/deltawh.py) must be a drop-in,
-    and the rename-swap ones must be storage-format-independent
-    (parquet/ORC)."""
+    """Every warehouse-semantics test runs under both backends — the
+    REAL-``_delta_log`` backend (sources/deltawh.py) must be a drop-in
+    for the plain rename-swap one."""
     return request.param
 from global_seismic_data_pipeline_spark.state import WatermarkStore
 

@@ -17,9 +17,9 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.fixture(params=["parquet", "orc"])
-def wh(request, spark, tmp_path):
-    return Warehouse(spark, str(tmp_path / "wh"), fmt=request.param)
+@pytest.fixture
+def wh(spark, tmp_path):
+    return Warehouse(spark, str(tmp_path / "wh"))
 
 
 def test_read_after_overwrite_with_new_schema(spark, wh):
@@ -44,15 +44,15 @@ def test_read_after_drop_and_recreate(spark, wh):
 def test_write_by_second_warehouse_or_raw_spark_is_seen(spark, wh):
     wh.overwrite(spark.createDataFrame([(1,)], "a int"), "t")
     assert wh.read("t").columns == ["a"]
-    other = Warehouse(spark, wh.root, fmt=wh.fmt)
+    other = Warehouse(spark, wh.root)
     other.overwrite(spark.createDataFrame([(2, 2.5)], "a int, d double"), "t")
     df = wh.read("t")
     assert df.columns == ["a", "d"]
     assert _rows(df) == [(2, 2.5)]
 
-    spark.createDataFrame([("z",)], "e string").write.mode("overwrite").format(
-        wh.fmt
-    ).save(wh.path("t"))
+    spark.createDataFrame([("z",)], "e string").write.mode("overwrite").parquet(
+        wh.path("t")
+    )
     df = wh.read("t")
     assert df.columns == ["e"]
     assert _rows(df) == [("z",)]
@@ -110,7 +110,6 @@ def test_second_read_of_unchanged_table_launches_no_job(spark, wh, jobs_launched
         wh.read("t")
     with jobs_launched() as second:
         df = wh.read("t")
-    if wh.fmt == "parquet":  # ORC infers on the driver, without a job
-        assert first[0] >= 1
+    assert first[0] >= 1
     assert second[0] == 0
     assert _rows(df) == [(1, "x")]
