@@ -55,7 +55,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "approx_distinct_users": workloads.approx_distinct_users,
         "setops_purchasers": workloads.setops_purchasers,
         "sessionize_users": workloads.sessionize_users,
-        # --- extension operators (LLM-data-pipeline + streaming shapes) ---
+        # --- extension operators (LLM-data-pipeline + event windows) ---
         "text_quality_score": workloads_ext.text_quality_score,
         "text_language_id": workloads_ext.text_language_id,
         "exact_dedup_docs": workloads_ext.exact_dedup_docs,

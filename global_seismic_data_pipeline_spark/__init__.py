@@ -17,7 +17,6 @@ A composable, tested library — not a notebook port. Modules:
 - ``pipeline``   — medallion stages (bronze, silver, gold, reports,
                    maintenance, runner DAG)
 - ``plans``      — driver-facing workloads + DuckDB oracles
-- ``streaming``  — Structured Streaming facade + stateful sessionization
 """
 
 __version__ = "0.1.0"

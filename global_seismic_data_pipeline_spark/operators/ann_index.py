@@ -41,13 +41,12 @@ _LISTS, _CB, _META = "_lists", "_codebook", "_meta"
 
 
 def _fresh_table(spark, table: str):
-    """Catalog read with the relation cache invalidated first: a
-    foreachBatch CLONE's saveAsTable append updates the files but not the
-    OUTER session's cached file listing — without the refresh, a reader
-    session sees the index as it looked before the stream ran (same
-    hazard class as the dedup sink's per-batch warehouse binding). The
-    refresh costs one file re-listing — the normal price of a fresh query
-    over an externally-appended table."""
+    """Catalog read with the relation cache invalidated first: an append
+    by another session or process updates the files but not THIS
+    session's cached file listing — without the refresh, the reader sees
+    the index as it looked before that append. The refresh costs one file
+    re-listing — the normal price of a fresh query over an
+    externally-appended table."""
     spark.catalog.refreshTable(table)
     return spark.table(table)
 
@@ -338,28 +337,3 @@ def reindex_due(
         "reasons": reasons,
     }
 
-
-def scrub_ids(
-    warehouse: Warehouse, batch_vectors: DataFrame, *, name: str = "ivf_index"
-) -> bool:
-    """Torn-replay repair for the IVF lists (vector-side twin of
-    ``neardup_incremental.scrub_batch_ids``): if any of the batch's ids
-    already sit in the stored lists (new ids are disjoint from stored by
-    the CDC contract, so presence ⟹ a previous attempt appended them
-    before crashing short of its commit), rebuild the lists WITHOUT those
-    ids under the same bucket spec. Cheap bucketed semi-probe first; the
-    rewrite only on the rare torn path. Returns True when a scrub ran."""
-    meta, _cb = _load(warehouse, name)
-    id_col, num_buckets = meta["id_col"], meta["num_buckets"]
-    spark = warehouse.spark
-    ids = batch_vectors.select(id_col).distinct()
-    lists = _fresh_table(spark, f"{name}{_LISTS}")
-    if not lists.join(ids, id_col, "left_semi").limit(1).count():
-        return False
-    # save_bucketed drops the old files before writing — materialize the
-    # survivors off them first (eager localCheckpoint)
-    clean = lists.join(ids, id_col, "left_anti").localCheckpoint()
-    warehouse.save_bucketed(
-        clean, f"{name}{_LISTS}", ("cell",), num_buckets=num_buckets
-    )
-    return True

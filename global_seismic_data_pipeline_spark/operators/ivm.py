@@ -33,7 +33,7 @@ refresh (a) reads the view AT the version recorded in
 and commits the new view state, (c) writes meta LAST. A crash between
 (b) and (c) re-runs against the meta-recorded PRE-state snapshot and
 deterministically recomputes the same result — idempotent in effect,
-the same replay contract as the streaming sinks.
+the same replay contract as the watermark control table.
 
 Scale: the refresh shuffles the DELTA (commit-sized) plus the view
 (group-cardinality-sized) — never the base table. At 100 TB with daily

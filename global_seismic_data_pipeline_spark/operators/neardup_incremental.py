@@ -61,9 +61,9 @@ _DOCS, _BANDS, _META, _SETS = "_docs", "_bands", "_meta", "_sets"
 
 
 def _fresh_table(spark, table: str):
-    """Catalog read with the relation cache invalidated first — a
-    foreachBatch clone's bucketed append updates files but not other
-    sessions' cached listings (see ann_index._fresh_table)."""
+    """Catalog read with the relation cache invalidated first — another
+    session's bucketed append updates files but not this session's
+    cached listing (see ann_index._fresh_table)."""
     spark.catalog.refreshTable(table)
     return spark.table(table)
 
@@ -212,56 +212,6 @@ def _load_meta(warehouse: Warehouse, name: str) -> dict:
     if len(row) != 1:
         raise ValueError(f"index {name!r} has no valid meta table")
     return row[0].asDict()
-
-
-def scrub_batch_ids(
-    warehouse: Warehouse,
-    batch_docs: DataFrame,
-    *,
-    name: str = "minhash_index",
-) -> bool:
-    """Torn-replay repair: if any of ``batch_docs``'s ids already sit in
-    the signature store (new ids are disjoint from stored ids by the CDC
-    contract, so presence ⟹ a previous attempt appended them before
-    crashing short of its commit), rebuild the store WITHOUT those ids.
-    Returns True when a scrub ran. Cheap-probe first (bucketed semi-join,
-    limit 1); the full-table rewrite happens only on the rare torn path.
-    Leaving the stale rows in place would make the replayed batch match
-    ITSELF in the store (self-pairs at jaccard 1.0) and double every
-    posting."""
-    meta = _load_meta(warehouse, name)
-    id_col, num_buckets = meta["id_col"], meta["num_buckets"]
-    spark = warehouse.spark
-    ids = batch_docs.select(id_col).distinct()
-    stored_docs = _fresh_table(spark, f"{name}{_DOCS}")
-    if not stored_docs.join(ids, id_col, "left_semi").limit(1).count():
-        return False
-    # save_bucketed DROPS the table before rewriting, so the cleaned rows
-    # must be fully materialized off the old files first — an eager
-    # localCheckpoint cuts the lineage at in-memory blocks (a lazy persist
-    # would still scan the just-deleted files on first use)
-    clean_docs = stored_docs.join(ids, id_col, "left_anti").localCheckpoint()
-    clean_sets = (
-        _fresh_table(spark, f"{name}{_SETS}")
-        .join(ids, id_col, "left_anti")
-        .localCheckpoint()
-    )
-    clean_bands = (
-        _fresh_table(spark, f"{name}{_BANDS}")
-        .join(ids, id_col, "left_anti")
-        .localCheckpoint()
-    )
-    warehouse.save_bucketed(
-        clean_docs, f"{name}{_DOCS}", (id_col,), num_buckets=num_buckets
-    )
-    warehouse.save_bucketed(
-        clean_sets, f"{name}{_SETS}", (id_col,), num_buckets=num_buckets
-    )
-    warehouse.save_bucketed(
-        clean_bands, f"{name}{_BANDS}", ("band", "bucket"),
-        num_buckets=num_buckets,
-    )
-    return True
 
 
 def incremental_minhash_pairs(

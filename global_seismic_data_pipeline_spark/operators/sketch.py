@@ -15,7 +15,7 @@ value-hash gate covers the whole pipeline.
 Scale shape: one hash-aggregate to registers — map-side partial ``max``
 per (group, bucket), shuffle carries at most m=2^p rows per group — then a
 second tiny aggregate to estimates. Registers are max-mergeable, so
-incremental/streaming variants union register tables and re-``max`` (see
+incremental variants union register tables and re-``max`` (see
 ``test_sketch.py::test_register_merge``); that is the HLL property that
 makes the sketch a warehouse primitive (store registers, merge on read).
 
@@ -377,9 +377,8 @@ def cms_counters(
 
     One shuffle: occurrences explode to d position rows (bounded ×d, like
     the bloom build), then a partial-aggregated count onto ≤ d·w rows per
-    group. The count aggregate is sum-mergeable, so the same expression
-    runs as a STREAMING windowed aggregate (see
-    ``streaming/facade.windowed_cms_counters``).
+    group. The count aggregate is sum-mergeable: counter tables built
+    over disjoint batches add up to the table over their union.
     """
     from .bloom import _h12
 

@@ -728,7 +728,7 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sessionize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful-shape sessionization in pure window algebra: 30-minute
+    """Sessionization in pure window algebra: 30-minute
     inactivity gap; per-session row with bounds and size."""
     ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

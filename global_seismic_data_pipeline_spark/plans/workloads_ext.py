@@ -1,9 +1,9 @@
-"""Extension workloads: LLM-training-data operators + streaming shapes.
+"""Extension workloads: LLM-training-data operators + event windows.
 
 These go beyond the reference's surface (SURVEY.md §7 step 9): text
 analysis, exact/near-duplicate detection, embedding similarity search,
-multimodal metadata plumbing, and the batch-equivalent forms of the
-streaming windows. Every query here has oracle SQL in ``oracles_ext.py`` —
+multimodal metadata plumbing, and tumbling/sliding event-time windows.
+Every query here has oracle SQL in ``oracles_ext.py`` —
 including the full MinHash-LSH / SimHash pipelines (portable md5-derived
 hash), the LSH/IVF ANN pipelines (quantized integer bucket/cell
 assignment, similarity.QUANT), connected-components clustering (recursive
@@ -499,10 +499,9 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Streaming shapes (batch-equivalent semantics of streaming/)
+# Event-time windows
 def tumbling_window_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-day tumbling window aggregate — identical semantics to the
-    Structured Streaming facade's windowed aggregation (§2.10)."""
+    """1-day tumbling window aggregate over the event log."""
     ev = load_table(spark, sf_dir, "events")
     win = F.window("ts", "1 day")
     return (

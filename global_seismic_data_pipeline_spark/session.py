@@ -60,7 +60,7 @@ def get_spark(
 
 def tiny_df(spark: SparkSession, rows, schema):
     """Single-partition DataFrame from a handful of DRIVER-side rows —
-    the control-table write shape (epoch markers, stats).
+    the control-table write shape (index meta, summary rows, stats).
 
     ``createDataFrame(rows, schema).coalesce(1)`` looks equivalent but
     costs ~4 s per call on local[32]: the Python-rows relation
@@ -74,10 +74,9 @@ def tiny_df(spark: SparkSession, rows, schema):
     )
 
 
-# Per-thread stack of open scopes, innermost last: foreachBatch bodies run
-# on a py4j callback thread, and a batch's scope must never release frames
-# the driver thread still holds (e.g. a range partitioning pinned between
-# its stats job and its rank pass).
+# Per-thread stack of open scopes, innermost last: a scope opened on one
+# thread must never release frames another thread still holds (e.g. a
+# range partitioning pinned between its stats job and its rank pass).
 _SCOPES = threading.local()
 
 

@@ -699,7 +699,7 @@ def _scan_adds(
     extra_fields: Sequence[StructField] | None = None,
 ) -> DataFrame:
     """One DataFrame over a set of add-file entries, honoring the table's
-    column-mapping mode — shared by ``read_delta`` and ``delta_tail``.
+    column-mapping mode — shared by ``read_delta`` and the change feed.
 
     'none': scan with the logical schema; hive-layout fast path when the
     directory names provably agree with the log, else per-partition-tuple
@@ -1825,8 +1825,8 @@ def commit_write(
     spec's transaction identifiers: the commit records a ``txn`` action,
     and a later attempt whose version is ≤ the table's recorded
     high-water mark for that appId SKIPS (returns -1, staged data files
-    unlinked) — the exactly-once primitive for streaming sinks
-    (appId = query id, version = epoch/batch id). The check runs inside
+    unlinked) — the exactly-once primitive for replayed writers
+    (appId = writer id, version = batch id). The check runs inside
     the OCC retry loop, so two racing duplicates cannot both commit."""
     import shutil
 
@@ -1866,7 +1866,7 @@ def commit_write(
             "size": os.path.getsize(dst),
             "modificationTime": now_ms,
             # spec: dataChange=false marks a pure rearrangement
-            # (OPTIMIZE) — streaming tails skip such adds entirely
+            # (OPTIMIZE) — change readers skip such adds entirely
             "dataChange": bool(data_change),
             **({"stats": s} if (s := _file_stats_json(dst, data_cols)) else {}),
         })
@@ -3130,81 +3130,6 @@ def write_checkpoint(
         json.dump(lc, fh)
     os.replace(lc_tmp, os.path.join(log, _LAST_CHECKPOINT))
     return finals[0]
-
-
-def delta_tail(
-    spark: SparkSession,
-    table_path: str,
-    from_version: int,
-    *,
-    to_version: int | None = None,
-    ignore_changes: bool = False,
-):
-    """Incremental consumption of an append-only Delta table — the
-    semantics of Spark's Delta streaming source: read ONLY the files
-    ADDED by commits in ``(from_version, to_version]`` (one scan over
-    exactly the new files, no snapshot diff, no old-data re-read — the
-    O(Δ) path an hourly 100 TB consumer needs).
-
-    A commit that REMOVED files (overwrite / MERGE rewrite) breaks the
-    append-only contract: refuse loudly, exactly like the real source's
-    default. ``ignore_changes=True`` opts into re-emitting rewritten
-    files' rows instead (the real source's ``ignoreChanges``, same
-    documented at-least-once caveat).
-
-    Returns ``(df, latest_version)``; pass ``latest_version`` back as the
-    next call's ``from_version`` (the caller persists it — e.g. in the
-    engine's watermark control table). ``df`` is None when no new commits.
-    """
-    commits, checkpoints = _list_log(table_path)
-    if not commits and not checkpoints:
-        raise ValueError(f"{table_path!r} has no _delta_log commits")
-    latest = max(list(commits) + list(checkpoints))
-    if to_version is None:
-        to_version = latest
-    if to_version <= from_version:
-        return None, from_version
-
-    state = snapshot_state(table_path, to_version)  # protocol gate + schema
-    schema = delta_schema(state)
-
-    new_adds: dict[str, dict] = {}
-    for v in range(from_version + 1, to_version + 1):
-        if v not in commits:
-            raise ValueError(
-                f"{table_path!r}: commit {v} missing from the log — the "
-                f"tail from {from_version} is broken (log cleanup passed "
-                "the consumer); re-seed from a full snapshot"
-            )
-        with open(os.path.join(_log_dir(table_path), commits[v])) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "add" in action:
-                    if action["add"].get("dataChange") is False:
-                        # spec: a dataChange=false add is a pure
-                        # rearrangement (OPTIMIZE) — its rows were
-                        # already delivered; emitting them again would
-                        # duplicate the stream
-                        continue
-                    a = _plain_add(action["add"])
-                    new_adds[a["path"]] = a
-                elif "remove" in action and not ignore_changes:
-                    if action["remove"].get("dataChange") is False:
-                        continue  # compaction tombstone: no rows changed
-                    raise ValueError(
-                        f"{table_path!r}: commit {v} removed "
-                        f"{action['remove']['path']!r} — not append-only; "
-                        "pass ignore_changes=True to re-emit rewritten "
-                        "files (at-least-once)"
-                    )
-    if not new_adds:
-        return spark.createDataFrame([], schema), to_version
-
-    files = list(new_adds.values())
-    return _scan_adds(spark, table_path, files, state), to_version
 
 
 def _dv_abs_path(table_path: str, descriptor) -> str | None:

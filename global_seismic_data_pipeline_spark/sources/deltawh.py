@@ -1291,8 +1291,8 @@ class DeltaLogWarehouse(Warehouse):
             self.spark, path, staged,
             mode="append", partition_by=pcols,
             operation="OPTIMIZE", extra_removes=removes_fn,
-            # pure rearrangement: streaming tails cross the OPTIMIZE
-            # commit without re-emitting (or refusing on) its files
+            # pure rearrangement: no rows changed, so change readers
+            # may skip this commit's files
             data_change=False,
         )
         after = len(dl.snapshot_state(path)["files"])

@@ -1405,7 +1405,8 @@ class IcebergTable:
         beginning): walks the snapshot log in commit order and unions
         only each snapshot's ADDED files. A non-append snapshot in the
         range (overwrite/delete/replace — rows may have vanished)
-        refuses unless ``ignore_changes``, the delta_tail contract.
+        refuses unless ``ignore_changes`` (at-least-once re-emission of
+        the rewritten files' rows, like Delta's ``ignoreChanges``).
         Returns (rows, new_cursor)."""
         # only MAIN's lineage: a snapshot staged on an audit branch
         # (append to_ref=...) must not leak into the tail until
@@ -2474,8 +2475,8 @@ def _write_snapshot(
     mlist = prior + new_manifests
     if extra_delete_files:
         # a second, DELETE manifest in the SAME snapshot (the v2
-        # streaming-upsert shape: equality delete + data append commit
-        # together at one sequence number)
+        # upsert shape: equality delete + data append commit together at
+        # one sequence number)
         del_entries = [
             {
                 "status": _STATUS_ADDED,

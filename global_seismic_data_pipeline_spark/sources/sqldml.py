@@ -653,21 +653,22 @@ class SqlDml:
                 "version long, timestamp_ms long, operation string, "
                 "numFiles long, sizeBytes long",
             )
-        stats = self.wh.table_stats(name)
-        version = (
-            self.wh.latest_version(name)
-            if hasattr(self.wh, "latest_version")
-            else None
-        )
+        if hasattr(self.wh, "describe_detail"):  # Delta-log backend
+            d = self.wh.describe_detail(name)
+        else:
+            d = {
+                "format": "parquet", "location": self.wh.path(name),
+                **self.wh.table_stats(name),
+                "partition_columns": self.wh.partition_columns(name),
+                "version": None,
+            }
         from ..session import tiny_df
 
         return tiny_df(
             self.spark,
             [(
-                "parquet", self.wh.path(name), stats["num_files"],
-                stats["size_bytes"],
-                ",".join(self.wh.partition_columns(name)) or None,
-                version,
+                d["format"], d["location"], d["num_files"], d["size_bytes"],
+                ",".join(d["partition_columns"]) or None, d["version"],
             )],
             "format string, location string, numFiles long, "
             "sizeInBytes long, partitionColumns string, version long",

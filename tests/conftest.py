@@ -25,7 +25,6 @@ def spark():
         "tests",
         master="local[4]",
         shuffle_partitions=4,
-        extra_conf={"spark.sql.streaming.schemaInference": "false"},
     )
     yield s
 

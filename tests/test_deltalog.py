@@ -561,101 +561,6 @@ def test_schema_enforcement_and_evolution(spark, tmp_path):
     assert dl.read_delta(spark, p, version=2).columns == ["k", "s", "score"]
 
 
-def test_delta_tail_incremental_consumption(spark, tmp_path):
-    """The streaming-source contract: each tail call reads ONLY the files
-    added since the cursor; non-append commits refuse unless
-    ignore_changes; a cleaned log breaks the tail loudly."""
-    p = str(tmp_path / "t")
-    dl.write_delta(_df(spark, [(1,)], "k int"), p)                   # v0
-    dl.write_delta(_df(spark, [(2,)], "k int"), p, mode="append")    # v1
-    dl.write_delta(_df(spark, [(3,)], "k int"), p, mode="append")    # v2
-
-    df, cur = dl.delta_tail(spark, p, from_version=0)
-    assert {r.k for r in df.collect()} == {2, 3} and cur == 2
-    # caught up: no new commits -> (None, same cursor)
-    df2, cur2 = dl.delta_tail(spark, p, from_version=cur)
-    assert df2 is None and cur2 == 2
-    # bounded tail: one commit at a time
-    df3, cur3 = dl.delta_tail(spark, p, from_version=0, to_version=1)
-    assert {r.k for r in df3.collect()} == {2} and cur3 == 1
-
-    dl.write_delta(_df(spark, [(9,)], "k int"), p, mode="overwrite")  # v3
-    with pytest.raises(ValueError, match="not append-only"):
-        dl.delta_tail(spark, p, from_version=cur)
-    df4, cur4 = dl.delta_tail(spark, p, from_version=cur,
-                              ignore_changes=True)
-    assert {r.k for r in df4.collect()} == {9} and cur4 == 3
-
-    # partitioned tables tail with their partition columns intact
-    pp = str(tmp_path / "pt")
-    dl.write_delta(_df(spark, [(1, "a")], "k int, g string"), pp,
-                   partition_by=["g"])
-    dl.write_delta(_df(spark, [(2, "b")], "k int, g string"), pp,
-                   partition_by=["g"], mode="append")
-    dft, _ = dl.delta_tail(spark, pp, from_version=0)
-    assert [(r.k, r.g) for r in dft.collect()] == [(2, "b")]
-
-    # log cleanup past the cursor: the tail must refuse, not skip data
-    for i in range(10):
-        dl.write_delta(_df(spark, [(10 + i,)], "k int"), p, mode="append")
-    log = os.path.join(p, "_delta_log")
-    for v in range(10):
-        os.remove(os.path.join(log, f"{v:020d}.json"))
-    with pytest.raises(ValueError, match="re-seed"):
-        dl.delta_tail(spark, p, from_version=3)
-
-
-def test_delta_tail_consumer_medallion_flow(spark, tmp_path):
-    """Bronze Delta → silver MERGE, O(Δ) per run with a durable cursor
-    (the reference's ingestion shape): each run reads only new files,
-    the cursor advances after the MERGE, a replay of the same slice is
-    idempotent (crash-between-fn-and-advance contract), and bounded
-    catch-up drains a backlog in max_versions batches."""
-    from global_seismic_data_pipeline_spark.sources.warehouse import Warehouse
-    from global_seismic_data_pipeline_spark.streaming.delta_source import (
-        DeltaTailConsumer,
-    )
-
-    bronze = str(tmp_path / "bronze_events")
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    consumer = DeltaTailConsumer(wh, bronze)
-
-    def merge_to_silver(batch):
-        wh.merge(batch, "silver", keys=["k"])
-
-    dl.write_delta(_df(spark, [(1, "a"), (2, "b")], "k int, v string"), bronze)
-    assert consumer.cursor() == -1
-    assert consumer.process_available(merge_to_silver) == 1  # v0 consumed
-    assert consumer.cursor() == 0
-    assert {(r.k, r.v) for r in wh.read("silver").collect()} == {(1, "a"), (2, "b")}
-    assert consumer.process_available(merge_to_silver) == 0  # caught up
-
-    # two more bronze commits: an update lands through the MERGE
-    dl.write_delta(_df(spark, [(2, "B2"), (3, "c")], "k int, v string"),
-                   bronze, mode="append")
-    dl.write_delta(_df(spark, [(4, "d")], "k int, v string"),
-                   bronze, mode="append")
-    # crash-replay: run fn on the pending slice WITHOUT advancing, then
-    # let the consumer run normally — the MERGE absorbs the duplicate
-    pending, _v = dl.delta_tail(spark, bronze, consumer.cursor())
-    merge_to_silver(pending)
-    assert consumer.process_available(merge_to_silver) == 2
-    got = {(r.k, r.v) for r in wh.read("silver").collect()}
-    assert got == {(1, "a"), (2, "B2"), (3, "c"), (4, "d")}
-
-    # bounded catch-up drains a backlog one version per batch
-    for i in range(3):
-        dl.write_delta(_df(spark, [(10 + i, "x")], "k int, v string"),
-                       bronze, mode="append")
-    batches = []
-    total = consumer.run_to_latest(
-        lambda b: batches.append(b.count()) or merge_to_silver(b),
-        max_versions_per_batch=1,
-    )
-    assert total == 3 and len(batches) == 3
-    assert wh.read("silver").count() == 7
-
-
 def test_optimize_sql_compacts_delta_backend(spark, tmp_path):
     """OPTIMIZE through the SQL façade composes with the delta backend:
     compaction is read + overwrite, i.e. one removes+adds commit, with
@@ -747,7 +652,7 @@ def test_column_mapping_name_mode_read(spark, tmp_path):
     PHYSICAL column names (col-NNN), partitionValues is keyed by physical
     names, the schemaString's field metadata holds the mapping. The
     reader must return logical names — nested struct fields included —
-    honor time travel, serve delta_tail, and REFUSE writes."""
+    at every version, and honor time travel."""
     from pyspark.sql.types import (
         IntegerType,
         StringType,
@@ -803,10 +708,15 @@ def test_column_mapping_name_mode_read(spark, tmp_path):
     assert got == {(1, "x"), (2, "y")}
     # time travel sees only v0's file
     assert {r.k for r in dl.read_delta(spark, p, version=0).collect()} == {1}
-    # the tail emits exactly v1's file, logically named
-    df, latest = dl.delta_tail(spark, p, 0)
-    assert latest == 1
-    assert [(r.k, r.s.c) for r in df.collect()] == [(2, "y")]
+    # each version reads logically named, nested fields included
+    v0_df = dl.read_delta(spark, p, version=0)
+    assert v0_df.columns == ["k", "s"]
+    assert [(r.k, r.s.c) for r in v0_df.collect()] == [(1, "x")]
+    v1_df = dl.read_delta(spark, p, version=1)
+    assert v1_df.schema["s"].dataType.fieldNames() == ["c"]
+    assert sorted((r.k, r.s.c) for r in v1_df.collect()) == [
+        (1, "x"), (2, "y"),
+    ]
     # APPENDS into the mapped table work: the batch stages under
     # PHYSICAL names and reads back logically
     batch = spark.createDataFrame([(3, ("z",))], "k int, s struct<c: string>")
@@ -965,9 +875,19 @@ def test_optimize_small_files_incremental(spark, tmp_path):
     assert sorted((r.id, r.pad) for r in wh.read("t").collect()) == before_rows
     # time travel to the pre-optimize version still reads the stragglers
     assert wh.read_version("t", pre_version).count() == len(before_rows)
-    # the OPTIMIZE commit is in the history
-    assert any(
-        h.get("operation") == "OPTIMIZE" for h in wh.history("t")
+    # the OPTIMIZE commit is in the history, and its actions are marked
+    # dataChange=false (the spec's pure-rearrangement marker, what real
+    # Delta writes) so change readers skip the rewritten rows
+    opt_v = next(
+        h["version"] for h in dl.delta_history(path)
+        if h["operation"] == "OPTIMIZE"
+    )
+    log = os.path.join(path, "_delta_log")
+    with open(os.path.join(log, f"{opt_v:020d}.json")) as fh:
+        acts = [json.loads(x) for x in fh if x.strip()]
+    file_acts = [a[k] for a in acts for k in ("add", "remove") if k in a]
+    assert file_acts and all(
+        fa["dataChange"] is False for fa in file_acts
     )
     # a second pass is a no-op (nothing small left twice over)
     assert wh.optimize_small_files("t", small_file_mb=0.01)[
@@ -1312,27 +1232,6 @@ def test_clone_preserves_deletion_vectors(spark, tmp_path):
     # vacuuming the clone never reaches outside its root: source intact
     wh.vacuum("t2", retain_hours=0.0)
     assert wh.read("t").count() == 27
-
-
-def test_delta_tail_dv_commit_refuses(spark, tmp_path):
-    """A DV delete breaks the append-only contract exactly like a
-    rewrite: the tail refuses; ignore_changes re-emits the file with
-    its vector APPLIED (no deleted rows resurface)."""
-    from global_seismic_data_pipeline_spark.sources.deltawh import (
-        DeltaLogWarehouse,
-    )
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
-    wh.overwrite(spark.range(0, 10).selectExpr("id"), "t")
-    v0 = max(wh.versions("t"))
-    wh.delete_with_dv("t", "id = 3")
-    with pytest.raises(ValueError, match="append-only"):
-        dl.delta_tail(spark, wh.path("t"), v0)
-    # ignore_changes re-emits ONLY the re-added (vectored) file — its
-    # surviving rows, never the deleted one
-    df, cur = dl.delta_tail(spark, wh.path("t"), v0, ignore_changes=True)
-    got = {r.id for r in df.collect()}
-    assert got and 3 not in got and got <= set(range(10))
 
 
 def test_vacuum_collects_superseded_dv_files(spark, tmp_path):
@@ -1788,47 +1687,6 @@ def test_rowtracking_append_assigns_row_ids(spark, tmp_path):
     )
 
 
-def test_delta_tail_crosses_optimize_datachange_false(spark, tmp_path):
-    """OPTIMIZE commits with dataChange=false (the spec's pure-
-    rearrangement marker, what real Delta writes): a tail resuming
-    across the compaction must neither refuse nor re-emit the
-    compacted rows — only genuinely new appends arrive. The rewritten
-    data stays correct and time travel still sees the stragglers."""
-    from global_seismic_data_pipeline_spark.sources.deltawh import (
-        DeltaLogWarehouse,
-    )
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path))
-    p = wh.path("t")
-    # many small files so optimize has victims
-    wh.overwrite(spark.range(0, 40).selectExpr("id").repartition(8), "t")
-    df, cur = dl.delta_tail(spark, p, from_version=-1)
-    assert df.count() == 40
-    stats = wh.optimize_small_files("t", small_file_mb=64)
-    assert stats["files_rewritten"] >= 2
-    wh.append(spark.range(40, 45).selectExpr("id"), "t")
-    # tail crosses the OPTIMIZE: no refusal, no duplicates, just adds
-    df2, cur2 = dl.delta_tail(spark, p, from_version=cur)
-    assert {r.id for r in df2.collect()} == {40, 41, 42, 43, 44}
-    assert dl.read_delta(spark, p).count() == 45
-    # the OPTIMIZE actions are marked dataChange=false in the log
-    st = dl.snapshot_state(p)
-    opt_v = next(
-        h["version"] for h in dl.delta_history(p)
-        if h["operation"] == "OPTIMIZE"
-    )
-    log = os.path.join(p, "_delta_log")
-    with open(os.path.join(log, f"{opt_v:020d}.json")) as fh:
-        acts = [json.loads(x) for x in fh if x.strip()]
-    assert all(
-        a["add"]["dataChange"] is False for a in acts if "add" in a
-    )
-    assert all(
-        a["remove"]["dataChange"] is False for a in acts if "remove" in a
-    )
-    assert st["version"] >= opt_v
-
-
 def test_liquid_clustering_append_preserves_domain(spark, tmp_path):
     """A liquid-clustered table (writer feature 'clustering' +
     delta.clustering domain metadata naming the clustering columns)
@@ -2192,7 +2050,7 @@ def test_column_mapping_id_mode_read(spark, tmp_path):
     parquet columns are NAMED differently from the schema's physicalName
     metadata AND ordered differently — only resolution through the
     parquet field ids (delta.columnMapping.id) reads them correctly.
-    Time travel and delta_tail work; writes refuse."""
+    Time travel resolves by id at every version; appends stamp ids."""
     import pyarrow as pa
 
     from pyspark.sql.types import (
@@ -2238,7 +2096,7 @@ def test_column_mapping_id_mode_read(spark, tmp_path):
     assert out.columns == ["k", "s"]
     assert {(r.k, r.s) for r in out.collect()} == {(1, "x1"), (2, "x2")}
 
-    # a second commit -> tail resolves by id too
+    # a second commit -> its file resolves by id too
     _idmode_parquet(os.path.join(p, "f2.parquet"), [
         ("other_name", pa.array(["z"]), 3, None),
         ("zzz", pa.array([9], pa.int32()), 1, None),
@@ -2250,8 +2108,11 @@ def test_column_mapping_id_mode_read(spark, tmp_path):
         fh.write(json.dumps({"commitInfo": {
             "timestamp": 2000, "operation": "APPEND"}}) + "\n")
     assert {r.k for r in dl.read_delta(spark, p, version=0).collect()} == {1, 2}
-    df, latest = dl.delta_tail(spark, p, 0)
-    assert latest == 1 and [(r.k, r.s) for r in df.collect()] == [(9, "z")]
+    v1_df = dl.read_delta(spark, p, version=1)
+    assert v1_df.columns == ["k", "s"]
+    assert {(r.k, r.s) for r in v1_df.collect()} == {
+        (1, "x1"), (2, "x2"), (9, "z"),
+    }
     # id-mode APPEND: stages under physical names WITH parquet field
     # ids stamped, so id-resolving readers (ours included) see it
     batch = spark.createDataFrame([(3, "w")], "k int, s string")
@@ -3395,11 +3256,7 @@ def test_cdf_remove_only_survives_later_schema_evolution(spark, dwh):
     v-1 snapshot state but projects the LATEST schema — after a later
     mergeSchema append adds a column, a feed range covering the old
     DELETE must null-fill the new column (like the cdc branch) instead
-    of throwing, and the CDF tail consumer must cross it."""
-    from global_seismic_data_pipeline_spark.streaming.delta_source import (
-        DeltaCdfTailConsumer,
-    )
-
+    of throwing."""
     dwh.overwrite(_df(spark, [(1, "a")], "k int, s string"), "t")
     p = dwh.path("t")
     dl.commit_set_properties(p, {"delta.enableChangeDataFeed": "true"})
@@ -3433,15 +3290,6 @@ def test_cdf_remove_only_survives_later_schema_evolution(spark, dwh):
         (2, "b", None, "delete"),
         (3, "c", 7.5, "insert"),
     }
-    # the tail consumer crosses the whole evolved range in one drain
-    consumer = DeltaCdfTailConsumer(dwh, p)
-    seen: list[tuple] = []
-    consumer.run_to_latest(
-        lambda df: seen.extend(
-            (r.k, r._change_type) for r in df.collect()
-        )
-    )
-    assert (2, "delete") in seen and (3, "insert") in seen
 
 
 def test_cdf_mixed_null_partition_values(spark, tmp_path):

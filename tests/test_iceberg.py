@@ -777,138 +777,6 @@ def test_iceberg_nested_types_read(spark, tmp_path):
         t2.spark_schema()
 
 
-def test_iceberg_tail_consumer_medallion(spark, tmp_path):
-    """Bronze Iceberg -> silver MERGE through the cursor-tracked
-    consumer: O(snapshot-delta) batches, at-least-once replay after a
-    crash between fn and the cursor advance stays idempotent."""
-    from global_seismic_data_pipeline_spark.sources.warehouse import (
-        Warehouse,
-    )
-    from global_seismic_data_pipeline_spark.streaming.iceberg_source import (
-        IcebergTailConsumer,
-    )
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    loc = str(tmp_path / "bronze")
-    iceberg.create_table(spark, loc, _mk_df(spark, [(1, "a", 1.0), (2, "b", 2.0)]))
-
-    def to_silver(batch):
-        wh.merge(batch, "silver", keys=["id"])
-
-    c = IcebergTailConsumer(wh, loc)
-    assert c.process_available(to_silver) == 1
-    assert {r.id for r in wh.read("silver").collect()} == {1, 2}
-    assert c.process_available(to_silver) == 0  # caught up
-
-    iceberg.append(spark, loc, _mk_df(spark, [(3, "c", 3.0)]))
-    iceberg.append(spark, loc, _mk_df(spark, [(2, "B", 20.0)]))
-    assert c.process_available(to_silver) == 1
-    silver = {r.id: r.val for r in wh.read("silver").collect()}
-    assert silver == {1: 1.0, 2: 20.0, 3: 3.0}
-
-    # crash replay: wind the cursor back one snapshot and re-consume;
-    # the MERGE re-applies the same slice with no duplicates
-    t = iceberg.IcebergTable(spark, loc)
-    snaps = sorted(s["snapshot-id"] for s in t.snapshots())
-    c._advance(snaps[-2])
-    assert c.process_available(to_silver) == 1
-    silver2 = {r.id: r.val for r in wh.read("silver").collect()}
-    assert silver2 == silver
-    assert wh.read("silver").count() == 3
-
-
-def test_iceberg_tail_consumer_crosses_wap_publish(spark, tmp_path):
-    """A cursor-tracked consumer over a table fed by write-audit-publish
-    sees staged branch rows exactly ONCE, and only AFTER fast_forward —
-    before the publish the consumer reports caught-up (the staged
-    snapshot is off main's lineage)."""
-    from global_seismic_data_pipeline_spark.sources.warehouse import (
-        Warehouse,
-    )
-    from global_seismic_data_pipeline_spark.streaming.iceberg_source import (
-        IcebergTailConsumer,
-    )
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    loc = str(tmp_path / "bronze")
-    iceberg.create_table(spark, loc, _mk_df(spark, [(1, "a", 1.0)]))
-    seen: list[set] = []
-    c = IcebergTailConsumer(wh, loc)
-    assert c.process_available(
-        lambda b: seen.append({r.id for r in b.collect()})
-    ) == 1
-    assert seen[-1] == {1}
-
-    iceberg.create_ref(spark, loc, "audit", kind="branch")
-    iceberg.append(
-        spark, loc, _mk_df(spark, [(2, "b", 2.0)]), to_ref="audit"
-    )
-    # staged but unpublished: the consumer must NOT see it
-    assert c.process_available(lambda b: seen.append(set())) == 0
-    iceberg.fast_forward(spark, loc, "main", "audit")
-    assert c.process_available(
-        lambda b: seen.append({r.id for r in b.collect()})
-    ) == 1
-    assert seen[-1] == {2}
-    assert c.process_available(lambda b: seen.append(set())) == 0
-
-
-def test_iceberg_tail_consumer_survives_metadata_expiry(spark, tmp_path):
-    """expire_metadata_versions deletes superseded vN.metadata.json
-    files but snapshots live IN the current metadata — a consumer
-    resuming after expiry must still advance from its cursor."""
-    from global_seismic_data_pipeline_spark.sources.warehouse import (
-        Warehouse,
-    )
-    from global_seismic_data_pipeline_spark.streaming.iceberg_source import (
-        IcebergTailConsumer,
-    )
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    loc = str(tmp_path / "bronze")
-    iceberg.create_table(spark, loc, _mk_df(spark, [(1, "a", 1.0)]))
-
-    seen: list[set] = []
-    c = IcebergTailConsumer(wh, loc)
-    assert c.process_available(lambda b: seen.append(
-        {r.id for r in b.collect()})) == 1
-    assert seen[-1] == {1}
-
-    for i in range(2, 8):
-        iceberg.append(spark, loc, _mk_df(spark, [(i, "x", float(i))]))
-    out = iceberg.expire_metadata_versions(loc, keep_last=1)
-    assert out["metadata_versions_deleted"] >= 5
-    # cursor snapshot is still in the (current) snapshot log: resume OK
-    assert c.process_available(lambda b: seen.append(
-        {r.id for r in b.collect()})) == 1
-    assert seen[-1] == {2, 3, 4, 5, 6, 7}
-    assert c.process_available(lambda b: seen.append(set())) == 0
-
-
-def test_iceberg_tail_consumer_refuses_expired_cursor(spark, tmp_path):
-    """expire_snapshots past the consumer's cursor snapshot removes the
-    proof that the tail is complete — resuming must refuse LOUDLY (the
-    at-least-once contract forbids silently skipping a gap)."""
-    from global_seismic_data_pipeline_spark.sources.warehouse import (
-        Warehouse,
-    )
-    from global_seismic_data_pipeline_spark.streaming.iceberg_source import (
-        IcebergTailConsumer,
-    )
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    loc = str(tmp_path / "bronze")
-    iceberg.create_table(spark, loc, _mk_df(spark, [(1, "a", 1.0)]))
-    c = IcebergTailConsumer(wh, loc)
-    assert c.process_available(lambda b: b.count()) == 1
-    for i in range(2, 5):
-        iceberg.append(spark, loc, _mk_df(spark, [(i, "x", float(i))]))
-    out = iceberg.expire_snapshots(spark, loc, keep_last=1)
-    assert out["snapshots_expired"] >= 1
-    with pytest.raises(iceberg.IcebergError, match="expired"):
-        c.process_available(lambda b: b.count())
-
-
 def test_iceberg_publish_occ_race(spark, tmp_path, monkeypatch):
     """Two writers computing the SAME next version: the loser's os.link
     hits the winner's file and raises loudly instead of clobbering; a

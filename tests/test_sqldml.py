@@ -600,13 +600,16 @@ def test_versioned_sql_surface(spark, tmp_path):
     assert {r.s for r in vwh.read("t").collect()} == {"a", "b"}
     assert engine.sql("DESCRIBE HISTORY t").collect()[0].operation == "RESTORE"
 
-    # DESCRIBE DETAIL carries the current version on this backend
+    # DESCRIBE DETAIL carries the format and current version on this backend
     det = engine.sql("DESCRIBE DETAIL t").collect()[0]
+    assert det.format == "delta"
     assert det.version == 2 and det.numFiles >= 1
 
-    # plain backend: versioned features refuse loudly
+    # plain backend: parquet with no version; versioned features refuse
     plain = SqlDml(Warehouse(spark, str(tmp_path / "pwh")))
     plain.wh.overwrite(spark.createDataFrame([(1,)], "k int"), "t")
+    pdet = plain.sql("DESCRIBE DETAIL t").collect()[0]
+    assert pdet.format == "parquet" and pdet.version is None
     for stmt in (
         "DESCRIBE HISTORY t",
         "RESTORE TABLE t TO VERSION AS OF 1",
