@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..operators import dedup
 from ..state import WatermarkStore
 from ..sources.warehouse import Warehouse, overwrite_counted
+from .maintenance import DEFAULT_CLUSTERING
 
 BRONZE_TABLE = "bronze_earthquakes"
 
@@ -98,13 +99,16 @@ def dedup_rewrite(wh: Warehouse) -> int:
     The overwrite is atomic (staging + rename), unlike the reference's
     in-place Delta overwrite-on-self which relies on Delta's log. The row
     count rides the rewrite via ``observe`` — one pass, not a count job
-    plus a write job.
+    plus a write job. The rewrite lands in bronze's OPTIMIZE layout, so
+    the maintenance pass has nothing left to do for it.
     """
     bronze = wh.read(BRONZE_TABLE)
     deduped = dedup.keep_latest(
         bronze, ["event_id"], "ingestion_ts", ["batch_id"]
     )
-    return overwrite_counted(wh, deduped, BRONZE_TABLE)
+    return overwrite_counted(
+        wh, deduped, BRONZE_TABLE, DEFAULT_CLUSTERING[BRONZE_TABLE]
+    )
 
 
 def utc_batch_id(now: datetime | None = None) -> str:

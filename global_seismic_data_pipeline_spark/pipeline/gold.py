@@ -17,6 +17,7 @@ from ..functions import physics as phy
 from ..functions.risk import risk_level_from_score
 from ..operators.rolling import rolling_metrics
 from ..sources.warehouse import Warehouse, overwrite_counted
+from .maintenance import DEFAULT_CLUSTERING
 from .silver import SILVER_TABLE
 
 GOLD_TABLES = (
@@ -192,7 +193,9 @@ def regional_physics(
 def run_gold(wh: Warehouse, *, clock: datetime | None = None) -> dict[str, int]:
     """Materialize all six gold tables from silver (overwrite semantics,
     ref: 05:79,123,153,187; calculations.py:149-152,222-225). Returns each
-    table's row count, observed on its write."""
+    table's row count, observed on its write. Clustered tables are
+    written in their OPTIMIZE layout, so maintenance does not rewrite
+    them."""
     silver = wh.read(SILVER_TABLE)
     builders = {
         "gold_regional_risk": lambda: regional_risk(silver, clock),
@@ -205,6 +208,8 @@ def run_gold(wh: Warehouse, *, clock: datetime | None = None) -> dict[str, int]:
         ),
     }
     return {
-        name: overwrite_counted(wh, build(), name)
+        name: overwrite_counted(
+            wh, build(), name, DEFAULT_CLUSTERING.get(name, ())
+        )
         for name, build in builders.items()
     }

@@ -7,6 +7,16 @@ row-group stats then give the same data-skipping effect for predicates on
 those keys); ANALYZE → catalog statistics when the table is cataloged;
 VACUUM → staging/trash cleanup (the warehouse already removes old data at
 swap time, so there is no retention backlog by construction).
+
+The reference runs OPTIMIZE as a separate pass after its writes. Here the
+pipeline writes each ``DEFAULT_CLUSTERING`` table in its OPTIMIZE layout
+already (``Warehouse.overwrite_clustered``: bronze dedup, the silver
+MERGE, the clustered gold tables), so the daily ``optimize_all`` finds
+every table laid out and skips it without a Spark job. The skip is safe
+because the warehouse vouches only for the exact file set its clustered
+write left (``Warehouse.laid_out``): an append, a pruned merge, a write by
+another ``Warehouse`` instance or a raw Spark write changes that set, and
+the table is rewritten as before.
 """
 
 from __future__ import annotations
@@ -19,7 +29,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import functions as F
 
-from ..sources.warehouse import Warehouse
+from ..sources.warehouse import TARGET_FILE_MB, Warehouse, target_files
 
 # ZORDER key sets the reference declares (TABLE OPTIMIZATION.py:33-36,60-97)
 DEFAULT_CLUSTERING = {
@@ -39,13 +49,13 @@ def compact(
     sort_cols: Sequence[str] = (),
     zorder_by: tuple[str, str] | None = None,
     curve: str = "morton",
-    target_file_mb: int = 128,
-) -> dict[str, int]:
+    target_file_mb: int = TARGET_FILE_MB,
+) -> dict:
     """Rewrite ``name`` into ~target-sized files, clustered on ``sort_cols``
     (ref OPTIMIZE/ZORDER, TABLE OPTIMIZATION.py:33-36).
 
-    ``repartitionByRange`` on the leading sort keys gives global range
-    clustering; ``sortWithinPartitions`` orders rows inside each file so
+    ``sort_cols`` gives the layout of ``warehouse.lay_out``: global range
+    clustering on the leading sort keys, rows sorted inside each file so
     parquet row-group min/max stats prune scans on those columns — the
     plain-parquet analogue of Z-ORDER's data skipping along the leading
     key. ``zorder_by=(a, b)`` instead lays rows along the Morton curve of
@@ -55,16 +65,32 @@ def compact(
     ``curve="hilbert"`` upgrades the two-key layout to the Hilbert curve
     (``operators/hilbert.cluster_by_hilbert`` — strictly tighter per-file
     boxes, what Databricks liquid clustering moved to).
-    Returns before/after file stats.
+
+    A flat table that this warehouse instance last wrote in the
+    ``sort_cols`` layout (``Warehouse.laid_out``) and that already has the
+    target file count is left alone, without a Spark job: rewriting it
+    would produce the same rows, file count and order. Any write since
+    then changes the table's file set and the rewrite runs as usual.
+
+    Returns ``files_before``/``files_after``, ``bytes`` written (0 when
+    skipped) and ``rewritten``.
     """
     if zorder_by and sort_cols:
         raise ValueError("pass either sort_cols or zorder_by, not both")
     if curve not in ("morton", "hilbert"):
         raise ValueError(f"unknown curve {curve!r}: morton or hilbert")
     before = wh.table_stats(name)
-    df = wh.read(name)
     part_cols = wh.partition_columns(name)  # preserve hive-style layout
-    n_parts = max(1, before["size_bytes"] // (target_file_mb * 1024 * 1024))
+    n_parts = target_files(before["size_bytes"], target_file_mb)
+    if (
+        sort_cols
+        and not part_cols
+        and before["num_files"] == n_parts
+        and wh.laid_out(name, sort_cols)
+    ):
+        return {"files_before": n_parts, "files_after": n_parts, "bytes": 0,
+                "rewritten": False}
+    df = wh.read(name)
     if zorder_by:
         if curve == "hilbert":
             from ..operators.hilbert import cluster_by_hilbert
@@ -76,25 +102,30 @@ def compact(
             from ..operators.zorder import cluster_by_zorder
 
             df = cluster_by_zorder(df, list(zorder_by), num_partitions=n_parts)
+        wh.overwrite(df, name, partition_by=part_cols)
     elif sort_cols:
-        df = df.repartitionByRange(n_parts, *sort_cols).sortWithinPartitions(
-            *sort_cols
+        wh.overwrite_clustered(
+            df, name, sort_cols, partition_by=part_cols,
+            target_file_mb=target_file_mb,
         )
     else:
-        df = df.coalesce(n_parts)
-    wh.overwrite(df, name, partition_by=part_cols)
+        wh.overwrite(df.coalesce(n_parts), name, partition_by=part_cols)
     after = wh.table_stats(name)
     return {"files_before": before["num_files"], "files_after": after["num_files"],
-            "bytes": after["size_bytes"]}
+            "bytes": after["size_bytes"], "rewritten": True}
 
 
 def optimize_all(wh: Warehouse) -> dict[str, dict[str, int]]:
     """Compact every table that exists, using the reference's clustering
-    keys (ref: TABLE OPTIMIZATION.py whole flow)."""
+    keys (ref: TABLE OPTIMIZATION.py whole flow). Returns the stats of
+    the tables actually rewritten; tables their last write already laid
+    out are skipped (see ``compact``)."""
     results = {}
     for name, keys in DEFAULT_CLUSTERING.items():
         if wh.exists(name):
-            results[name] = compact(wh, name, sort_cols=keys)
+            res = compact(wh, name, sort_cols=keys)
+            if res["rewritten"]:
+                results[name] = res
     return results
 
 

@@ -22,6 +22,7 @@ from ..session import materialize, materialized_scope
 from ..state import WatermarkStore
 from ..sources.warehouse import Warehouse
 from .bronze import BRONZE_TABLE
+from .maintenance import DEFAULT_CLUSTERING
 
 SILVER_TABLE = "silver_earthquakes"
 
@@ -91,7 +92,8 @@ def run_silver(
     ``partition_col`` (e.g. ``"year"``) stores silver directory-partitioned
     on that column and prunes the MERGE rewrite to partitions the increment
     touches — for daily incremental loads that is one or two partitions
-    instead of the whole table (SURVEY.md §7 hard-part a at scale)."""
+    instead of the whole table (SURVEY.md §7 hard-part a at scale).
+    Without it the MERGE rewrites silver whole, in its OPTIMIZE layout."""
     entry = store.get(SILVER_TABLE) or store.init(SILVER_TABLE, "time")
     bronze = wh.read(BRONZE_TABLE)
     if entry.watermark_value is not None:
@@ -113,7 +115,9 @@ def run_silver(
         if stats.n == 0:
             return 0
         wh.merge(
-            silver, SILVER_TABLE, keys=["event_id"], prune_partition_col=partition_col
+            silver, SILVER_TABLE, keys=["event_id"],
+            prune_partition_col=partition_col,
+            cluster_by=DEFAULT_CLUSTERING[SILVER_TABLE],
         )
         store.advance(SILVER_TABLE, stats.max_t, stats.n)
         return stats.n

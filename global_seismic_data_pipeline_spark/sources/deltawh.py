@@ -698,7 +698,7 @@ class DeltaLogWarehouse(Warehouse):
 
     def merge(
         self, updates, name, keys, *,
-        prune_partition_col=None, merge_schema=False,
+        prune_partition_col=None, merge_schema=False, cluster_by=(),
     ):
         """MERGE = anti-join + union rewrite (Warehouse.merge) — which
         MOVES surviving rows between files. delta.rowTracking.enabled
@@ -753,14 +753,16 @@ class DeltaLogWarehouse(Warehouse):
             self._pending_operation = "MERGE"
         try:
             self._merge_dispatch(
-                updates, name, keys, prune_partition_col, merge_schema
+                updates, name, keys, prune_partition_col, merge_schema,
+                cluster_by,
             )
         finally:
             self._pending_cdc_df = None
             self._pending_operation = None
 
     def _merge_dispatch(
-        self, updates, name, keys, prune_partition_col, merge_schema=False
+        self, updates, name, keys, prune_partition_col, merge_schema=False,
+        cluster_by=(),
     ):
         if dl.is_delta_table(self.path(name)):
             st = dl.snapshot_state(self.path(name))
@@ -774,16 +776,17 @@ class DeltaLogWarehouse(Warehouse):
             ):
                 self._merge_preserving_row_ids(
                     updates, name, keys, conf, prune_partition_col,
-                    merge_schema,
+                    merge_schema, cluster_by,
                 )
                 return
         super().merge(
             updates, name, keys, prune_partition_col=prune_partition_col,
-            merge_schema=merge_schema,
+            merge_schema=merge_schema, cluster_by=cluster_by,
         )
 
     def _merge_preserving_row_ids(
-        self, updates, name, keys, conf, pcol, merge_schema=False
+        self, updates, name, keys, conf, pcol, merge_schema=False,
+        cluster_by=(),
     ) -> None:
         """The rowTracking MERGE: read the target WITH row ids exposed
         under the materialized column names, stitch matched updates to
@@ -844,7 +847,7 @@ class DeltaLogWarehouse(Warehouse):
         try:
             super().merge(
                 upd, name, keys, prune_partition_col=pcol,
-                merge_schema=merge_schema,
+                merge_schema=merge_schema, cluster_by=cluster_by,
             )
         finally:
             self._rt_target = None

@@ -502,6 +502,17 @@ class IcebergWarehouse(Warehouse):
         The rewrite ``merge`` remains for v1 tables and bulk batches."""
         return ib.upsert_by_keys(self.spark, self.path(name), df, keys, **kw)
 
+    def describe_detail(self, name: str) -> dict:
+        """DESCRIBE DETAIL from the table metadata: the live data files
+        of the current snapshot, whose id is the table's version."""
+        return {
+            "format": "iceberg",
+            "location": self.path(name),
+            **self.table_stats(name),
+            "partition_columns": self.partition_columns(name),
+            "version": self.table(name).current_snapshot_id(),
+        }
+
     def table_stats(self, name: str) -> dict[str, int]:
         files = self.table(name).data_files()
         return {

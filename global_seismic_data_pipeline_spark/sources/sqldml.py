@@ -653,7 +653,7 @@ class SqlDml:
                 "version long, timestamp_ms long, operation string, "
                 "numFiles long, sizeBytes long",
             )
-        if hasattr(self.wh, "describe_detail"):  # Delta-log backend
+        if hasattr(self.wh, "describe_detail"):  # Delta / Iceberg backends
             d = self.wh.describe_detail(name)
         else:
             d = {

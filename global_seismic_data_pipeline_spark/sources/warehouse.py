@@ -39,6 +39,13 @@ changes the fingerprint and forces a fresh inference. The same files under the s
 inferred schema, so a hit only skips work whose result is already known.
 The Delta and Iceberg backends override ``read`` and take the schema from
 their logs, so they never infer and need no memo.
+
+Layout: ``overwrite_clustered`` writes a table in the layout OPTIMIZE
+gives it (``lay_out``: target-sized files, range-clustered and sorted on
+the table's keys) and remembers the keys with the file set it left, so
+``maintenance.compact`` can skip a table its last write already laid out.
+The same fingerprint argument as the read memo keeps that safe: any later
+writer changes the file set, and a changed file set rewrites.
 """
 
 from __future__ import annotations
@@ -68,6 +75,28 @@ _SCHEMA_CONFS = (
 )
 
 
+# data-file size a clustered write aims for (OPTIMIZE's default target)
+TARGET_FILE_MB = 128
+
+
+def target_files(size_bytes: int, target_file_mb: int = TARGET_FILE_MB) -> int:
+    """How many ~``target_file_mb`` files a table of ``size_bytes`` gets."""
+    return max(1, size_bytes // (target_file_mb * 1024 * 1024))
+
+
+def lay_out(df: DataFrame, keys: Sequence[str], n_files: int) -> DataFrame:
+    """The physical layout of a clustered table, shared by OPTIMIZE
+    (``maintenance.compact``) and every whole-table write of a clustered
+    table: ``n_files`` files, range-clustered on ``keys`` across files and
+    sorted on them inside each, so parquet min/max stats prune on the
+    leading key. One file needs no range bounds: ``coalesce(1)`` plus the
+    sort adds no exchange, where ``repartitionByRange(1, ...)`` would cost
+    one more Spark job per write."""
+    if n_files == 1:
+        return df.coalesce(1).sortWithinPartitions(*keys)
+    return df.repartitionByRange(n_files, *keys).sortWithinPartitions(*keys)
+
+
 def _file_set(path: str) -> tuple:
     """Sorted (relative path, size, mtime_ns) of every file under ``path``
     — what schema inference reads, summary files included."""
@@ -94,6 +123,9 @@ class Warehouse:
         self._pending_merge_schema = False
         # table name -> (inference fingerprint, inferred schema); see read()
         self._schemas: dict[str, tuple[tuple, StructType]] = {}
+        # table name -> (clustering keys, file set just after the
+        # clustered write); see overwrite_clustered() / laid_out()
+        self._layouts: dict[str, tuple[tuple[str, ...], tuple]] = {}
         os.makedirs(root, exist_ok=True)
 
     # -- paths ------------------------------------------------------------
@@ -268,6 +300,42 @@ class Warehouse:
         if os.path.isdir(trash):
             shutil.rmtree(trash)
 
+    def overwrite_clustered(
+        self,
+        df: DataFrame,
+        name: str,
+        keys: Sequence[str],
+        *,
+        partition_by: Sequence[str] = (),
+        target_file_mb: int = TARGET_FILE_MB,
+    ) -> None:
+        """``overwrite`` in the layout OPTIMIZE gives a table clustered on
+        ``keys`` (``lay_out``): max(1, size // target) files, sized from
+        the table being replaced. Remembers the keys and the file set the
+        write left, so ``maintenance.compact`` on the same keys can skip
+        the table until any writer changes it (``laid_out``). No ``keys``
+        is a plain ``overwrite``."""
+        if not keys:
+            self.overwrite(df, name, partition_by=partition_by)
+            return
+        size = self.table_stats(name)["size_bytes"] if self.exists(name) else 0
+        n_files = target_files(size, target_file_mb)
+        self.overwrite(lay_out(df, keys, n_files), name, partition_by=partition_by)
+        self._layouts[name] = (tuple(keys), _file_set(self.path(name)))
+
+    def laid_out(self, name: str, keys: Sequence[str]) -> bool:
+        """True when this instance's last ``overwrite_clustered`` of
+        ``name`` used ``keys`` and no file under the table has changed
+        since. An append, a pruned merge, another instance's write or a
+        raw Spark write all change the file set, so this never vouches
+        for files it did not lay out."""
+        memo = self._layouts.get(name)
+        return (
+            memo is not None
+            and memo[0] == tuple(keys)
+            and memo[1] == _file_set(self.path(name))
+        )
+
     # -- MERGE ------------------------------------------------------------
     def overwrite_dynamic(self, df: DataFrame, name: str) -> dict[str, int]:
         """Dynamic partition overwrite (Spark's
@@ -366,6 +434,7 @@ class Warehouse:
         *,
         prune_partition_col: str | None = None,
         merge_schema: bool = False,
+        cluster_by: Sequence[str] = (),
     ) -> None:
         """Upsert: matched target rows are replaced by update rows, unmatched
         update rows are inserted (ref MERGE, 04_silver_transformation.py:196-202).
@@ -387,10 +456,18 @@ class Warehouse:
         them). ``merge_schema=True`` evolves instead (Delta
         ``withSchemaEvolution``): the new columns enter the table schema
         in the same commit, surviving target rows backfill NULL.
+
+        ``cluster_by`` writes the table in its OPTIMIZE layout wherever
+        the merge replaces it whole — the unpartitioned create and the
+        unpruned rewrite (``overwrite_clustered``); with
+        ``prune_partition_col`` the table keeps its partition layout.
         """
         pcol = prune_partition_col
         if not self.exists(name):
-            self.overwrite(updates, name, partition_by=[pcol] if pcol else ())
+            if pcol:
+                self.overwrite(updates, name, partition_by=[pcol])
+            else:
+                self.overwrite_clustered(updates, name, cluster_by)
             return
         target = self._merge_read_target(name)
         # case-INSENSITIVE drift detection: Spark resolves column
@@ -425,7 +502,7 @@ class Warehouse:
                     updates.select(*keys), on=list(keys), how="left_anti"
                 )
                 merged = kept.unionByName(updates.select(*target.columns))
-                self.overwrite(merged, name)
+                self.overwrite_clustered(merged, name, cluster_by)
                 return
 
             # compare partition values in string form: hive-style directory
@@ -777,13 +854,18 @@ class Warehouse:
             p = os.path.join(p, sub[0])
 
 
-def overwrite_counted(wh: Warehouse, df: DataFrame, name: str) -> int:
-    """``wh.overwrite(df, name)`` returning the rows written, counted by an
-    ``Observation`` that rides the write — no read-back count job."""
+def overwrite_counted(
+    wh: Warehouse, df: DataFrame, name: str, cluster_by: Sequence[str] = ()
+) -> int:
+    """``wh.overwrite_clustered(df, name, cluster_by)`` returning the rows
+    written, counted by an ``Observation`` that rides the write — no
+    read-back count job."""
     from pyspark.sql import Observation
 
     obs = Observation()
-    wh.overwrite(df.observe(obs, F.count(F.lit(1)).alias("n")), name)
+    wh.overwrite_clustered(
+        df.observe(obs, F.count(F.lit(1)).alias("n")), name, cluster_by
+    )
     return obs.get["n"]
 
 

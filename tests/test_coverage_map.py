@@ -40,14 +40,12 @@ _NON_QUERY_TOKENS = {
     "read_geojson",          # source fn
     "read_jsonl",            # source fn
     "recent_major_events",   # report-layer fn (pytest-pinned)
-    "remove_orphan_files",   # iceberg maintenance fn (pytest-pinned)
     "rewrite_position_deletes",  # iceberg maintenance fn (oracle-gated
     #                              inside iceberg_delete_where_orders)
     "split_valid",           # cleaning fn
     "symbols_after",         # bpe contract fn
     "prune_partition_col",   # maintenance fn
     "enable_column_mapping",  # delta column-mapping upgrade (pytest-pinned)
-    "merge_schema",          # merge evolution kwarg (pytest-pinned)
     "rewrite_manifests",     # iceberg maintenance fn (pytest-pinned)
 }
 
@@ -87,6 +85,17 @@ def test_every_coverage_query_token_exists():
         "either the query was renamed/removed (fix the row) or a new "
         "library fn joined the prose (extend _NON_QUERY_TOKENS "
         "consciously)"
+    )
+
+
+def test_every_allowlisted_token_is_still_used():
+    """An allowlist entry no correctness-column cell names any more would
+    let that token back in without the review edit the gate exists to
+    force — drop the entry when its last mention goes."""
+    stale = sorted(_NON_QUERY_TOKENS - _column2_tokens(open(_COVERAGE).read()))
+    assert not stale, (
+        f"_NON_QUERY_TOKENS entries {stale} appear in no COVERAGE.md "
+        "correctness-column cell — remove them from the allowlist"
     )
 
 

@@ -620,6 +620,26 @@ def test_versioned_sql_surface(spark, tmp_path):
             plain.sql(stmt)
 
 
+def test_describe_detail_on_iceberg_reports_format_and_snapshot(spark, tmp_path):
+    """DESCRIBE DETAIL on the Iceberg backend names the format and takes
+    the version from the current snapshot, as Iceberg tables report."""
+    from global_seismic_data_pipeline_spark.sources.icebergwh import (
+        IcebergWarehouse,
+    )
+
+    iwh = IcebergWarehouse(spark, str(tmp_path / "iwh"))
+    iwh.overwrite(spark.createDataFrame([(1, "a")], "k int, s string"), "t")
+    iwh.overwrite(
+        spark.createDataFrame([(1, "a2"), (2, "b")], "k int, s string"), "t"
+    )
+    det = SqlDml(iwh).sql("DESCRIBE DETAIL t").collect()[0]
+    assert det.format == "iceberg"
+    assert det.version == iwh.table("t").current_snapshot_id()
+    assert det.version is not None
+    assert det.numFiles == iwh.table_stats("t")["num_files"] >= 1
+    assert det.partitionColumns is None
+
+
 def _part_files(wh, name, part):
     import os
 

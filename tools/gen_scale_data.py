@@ -62,11 +62,17 @@ def _write_single_file(df, out: str, name: str) -> None:
 
     staging = f"{out}/.__{name}_staging"
     df.coalesce(1).write.mode("overwrite").parquet(staging)
-    part = glob.glob(f"{staging}/part-*.parquet")[0]
+    parts = glob.glob(f"{staging}/part-*.parquet")
+    if len(parts) != 1:
+        shutil.rmtree(staging)
+        raise RuntimeError(
+            f"{name}: expected one part file from the coalesced write, "
+            f"found {len(parts)}"
+        )
     dest = f"{out}/{name}.parquet"
     if os.path.isdir(dest):
         shutil.rmtree(dest)
-    shutil.move(part, dest)
+    os.replace(parts[0], dest)  # also replaces an existing regular file
     shutil.rmtree(staging)
 
 
